@@ -19,10 +19,6 @@ import org.apache.spark.sql.DataFrame
   * registry showed a blanket version loses: the extra tasks it pushes
   * through every downstream tiny stage cost more than the parallelism
   * wins on queries whose heavy work sits after the first exchange).
-  * [[boostScan]] is the scale-adaptive file-backed variant: it fires only
-  * while the table's bytes undershoot one split per core, so a production
-  * corpus scan (thousands of splits) passes through untouched — the
-  * repartition is scale-gated by data size, not a local[32] constant.
   *
   * Row-content neutral: round-robin repartition neither drops, dups nor
   * alters rows (sort-before-repartition keeps the assignment
@@ -35,19 +31,13 @@ object Par {
     * carries fewer partitions than the session parallelism (so it is a
     * no-op at production scale, where corpus scans have thousands of
     * splits). The `.rdd` guard costs one extra physical-planning pass —
-    * fine at a once-per-query site, too expensive inside a hot accessor
-    * (use [[boostScan]] there).
+    * fine at a once-per-query site, too expensive inside a hot accessor.
     */
   def boost(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
-  /** Boost a parquet-backed frame only when the file bytes undershoot one
-    * split per core — the guard is a filesystem stat (no extra Spark
-    * planning pass; the naive `df.rdd.getNumPartitions` guard measurably
-    * taxed every accessor call with a full physical-planning pass).
-    */
   /** Spread a COMPUTE-bound narrow frame across the session parallelism.
     *
     * AQE coalesces post-shuffle partitions by BYTES (advisory 64 MB /
@@ -63,18 +53,4 @@ object Par {
     */
   def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-  def boostScan(df: DataFrame, path: String): DataFrame = {
-    val spark = df.sparkSession
-    val p = spark.sparkContext.defaultParallelism
-    val maxSplit = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-      .stripSuffix("b").stripSuffix("B") match {
-      case s if s.forall(_.isDigit) => s.toLong
-      case _ => 134217728L
-    }
-    val bytes =
-      try java.nio.file.Files.size(java.nio.file.Paths.get(path))
-      catch { case _: Exception => Long.MaxValue }
-    if (bytes < maxSplit.min(Long.MaxValue / p) * p) df.repartition(p) else df
-  }
 }

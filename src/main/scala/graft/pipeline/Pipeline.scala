@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors, LinkedBlockingQueue}
+
 import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
@@ -14,7 +16,12 @@ import scala.util.{Failure, Success, Try}
   * open after 5 failures, half-open after recovery timeout).
   *
   * The runner is driver-side control flow ONLY — each job body is expected
-  * to launch distributed Spark work; nothing here touches data.
+  * to launch distributed Spark work; nothing here touches data. Ready jobs
+  * run concurrently, each on its own driver thread, as the reference
+  * launches every ready job at once: Spark accepts jobs from several
+  * threads of one session, so the small jobs of independent DAG branches
+  * overlap instead of leaving cores idle between them. Job bodies must
+  * therefore not share unsynchronized mutable state.
   */
 object Pipeline {
 
@@ -62,7 +69,8 @@ object Pipeline {
       case c => c.toString
     }
 
-    def record(jobName: String, attempts: Int, error: Throwable): Unit = {
+    /** Appends one line; safe to call from concurrent job bodies. */
+    def record(jobName: String, attempts: Int, error: Throwable): Unit = synchronized {
       val line =
         s"""{"job_name":"${esc(jobName)}","attempts":$attempts,""" +
         s""""error_class":"${esc(error.getClass.getName)}",""" +
@@ -74,11 +82,12 @@ object Pipeline {
         java.nio.file.StandardOpenOption.APPEND)
     }
 
-    def entries(): Seq[String] =
+    def entries(): Seq[String] = synchronized {
       if (java.nio.file.Files.exists(p))
         scala.jdk.CollectionConverters.ListHasAsScala(
           java.nio.file.Files.readAllLines(p)).asScala.toSeq
       else Seq.empty
+    }
 
     def asDataFrame(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
       import spark.implicits._
@@ -120,11 +129,21 @@ object Pipeline {
     last
   }
 
-  /** Run the DAG: repeatedly pick jobs whose dependencies all succeeded
-    * (`get_ready_jobs` semantics); jobs whose dependencies failed are
-    * skipped, not run. Throws on cycles/unknown deps. When a `dlq` is
-    * given, every exhausted-retry failure is persisted there (name,
-    * attempts, error payload) before the run continues.
+  /** Run the DAG with `get_ready_jobs` semantics, event-driven: every job
+    * starts on a driver thread the moment all its dependencies have
+    * succeeded, alongside whatever else is ready, so independent jobs
+    * (and the many small Spark jobs inside them) overlap on idle cores.
+    * Jobs whose dependencies failed or were skipped are skipped, not run.
+    * Throws on duplicate names and unknown dependencies before any job
+    * starts, and on cycles once everything outside them has run. When a
+    * `dlq` is given, every exhausted-retry failure is persisted there
+    * (name, attempts, error payload) as it happens.
+    *
+    * Job bodies run concurrently on a pool of
+    * `min(jobs.size, availableProcessors)` daemon threads named
+    * `graft-pipeline-N`, so they must not share unsynchronized mutable
+    * state. A fatal error thrown by a body (one `Try` does not catch)
+    * stops the run and is rethrown here. No pool thread outlives the call.
     */
   def run(jobs: Seq[Job], policy: RetryPolicy = RetryPolicy(),
       dlq: Option[DeadLetterQueue] = None): RunReport = {
@@ -132,31 +151,67 @@ object Pipeline {
     require(byName.size == jobs.size, "duplicate job names")
     jobs.foreach(j => j.dependsOn.foreach(d =>
       require(byName.contains(d), s"unknown dependency: ${j.name} -> $d")))
+    val deps = jobs.map(j => j.name -> j.dependsOn.distinct).toMap
+    val dependents = jobs.flatMap(j => deps(j.name).map(_ -> j.name))
+      .groupMap(_._1)(_._2).withDefaultValue(Seq.empty)
+    if (jobs.isEmpty) return RunReport(Map.empty)
 
     val status = mutable.Map.empty[String, JobStatus]
-    var progressed = true
-    while (status.size < jobs.size && progressed) {
-      progressed = false
-      val ready = jobs.filter(j => !status.contains(j.name) &&
-        j.dependsOn.forall(d => status.get(d).contains(Succeeded)))
-      val doomed = jobs.filter(j => !status.contains(j.name) &&
-        j.dependsOn.exists(d => status.get(d).exists(s => s != Succeeded)))
-      for (j <- doomed) { status(j.name) = SkippedDeps; progressed = true }
-      for (j <- ready) {
-        progressed = true
+    val waitingOn = mutable.Map(jobs.map(j => j.name -> deps(j.name).size): _*)
+    // (job, attempts, outcome) posted by the pool, consumed on this thread
+    val done = new LinkedBlockingQueue[(String, Int, Try[Unit])]()
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(
+      math.min(jobs.size, Runtime.getRuntime.availableProcessors), { (r: Runnable) =>
+        val t = new Thread(r, s"graft-pipeline-${threads.size + 1}")
+        t.setDaemon(true)
+        threads.add(t)
+        t
+      })
+    var running = 0
+    def start(name: String): Unit = {
+      running += 1
+      pool.execute(() => {
         var attempts = 0
-        val result = runWithRetry(policy) { () => attempts += 1; j.run() }
-        status(j.name) = result match {
-          case Success(_) => Succeeded
+        val result =
+          try runWithRetry(policy) { () => attempts += 1; byName(name).run() }
+          catch { case fatal: Throwable => Failure(new FatalJobError(fatal)) }
+        done.add((name, attempts, result))
+      })
+    }
+    def skip(name: String): Unit = if (!status.contains(name)) {
+      status(name) = SkippedDeps
+      dependents(name).foreach(skip)
+    }
+    try {
+      jobs.filter(j => waitingOn(j.name) == 0).foreach(j => start(j.name))
+      while (running > 0) {
+        val (name, attempts, result) = done.take()
+        running -= 1
+        result match {
+          case Success(_) =>
+            status(name) = Succeeded
+            for (d <- dependents(name) if !status.contains(d)) {
+              waitingOn(d) -= 1
+              if (waitingOn(d) == 0) start(d)
+            }
+          case Failure(f: FatalJobError) => throw f.getCause
           case Failure(e) =>
-            dlq.foreach(_.record(j.name, attempts, e))
-            FailedJob(attempts, e)
+            dlq.foreach(_.record(name, attempts, e))
+            status(name) = FailedJob(attempts, e)
+            dependents(name).foreach(skip)
         }
       }
+    } finally {
+      pool.shutdownNow()
+      threads.forEach(_.join())
     }
     if (status.size < jobs.size)
       throw new IllegalArgumentException(
         s"dependency cycle among: ${jobs.map(_.name).filterNot(status.contains).mkString(", ")}")
     RunReport(status.toMap)
   }
+
+  /** Carries a fatal job error from a pool thread to the caller of [[run]]. */
+  private final class FatalJobError(cause: Throwable) extends Exception(cause)
 }

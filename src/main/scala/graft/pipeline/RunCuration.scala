@@ -31,8 +31,9 @@ import graft.text.{CorpusCuration, TextAnalysis}
   * failed stage re-runs from the previous stage's output, not from the
   * raw crawl), orchestrated through the same DAG runner / retry /
   * dead-letter control plane as [[RunPipeline]]. `tokenizer_learn` and
-  * `leak_split` are independent branches off the balanced corpus — the
-  * DAG runner runs them in either order; packing waits on the merges.
+  * `leak_split` are independent branches off the balanced corpus, as are
+  * the media branches off the encoded one — the DAG runner runs ready
+  * branches concurrently; packing waits on the merges.
   *
   * Stage outputs under `outRoot`:
   * {{{
@@ -274,7 +275,10 @@ object RunCuration {
           .select("doc_id", "shard", "pos"), lay.shards)
         stageDocs("sequences") = spark.read.parquet(lay.packed).count()
       }),
-      Pipeline.Job("corpus_report", dependsOn = Seq("pack_and_shard"))(() => {
+      // the multimodal branch's keep counts are report rows too, so the
+      // report waits on that branch as well as on the text funnel
+      Pipeline.Job("corpus_report",
+          dependsOn = Seq("pack_and_shard", "multimodal_screen", "image_dedup"))(() => {
         import spark.implicits._
         val rows = Seq("encoded", "mmkept", "mmimages_kept", "curated", "stripped",
           "sentdeduped", "spandeduped", "gophered", "kept", "balanced", "merges",

@@ -34,6 +34,13 @@ import graft.sources.Sinks
   * watermark commits AFTER the write ([[graft.incremental.Incremental]]
   * at-least-once semantics: a crashed run re-reads, never skips).
   *
+  * The DAG runner starts each job as soon as its inputs are done: the
+  * three silver jobs run concurrently, and each gold job starts the moment
+  * its own silver inputs have landed (`sales_summary` and `ml_features`
+  * need only orders). Job bodies share only thread-safe state — the
+  * concurrent result maps, the notifier and the DLQ — and every write
+  * carries its own options rather than toggling session conf.
+  *
   * Output layout under `outRoot`:
   * {{{
   *   silver/{orders,customers,parts}/      partitioned parquet

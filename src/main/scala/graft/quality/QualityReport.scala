@@ -88,10 +88,13 @@ object QualityReport {
   trait Notifier { def send(alert: Alert): Unit }
 
   object Notifier {
-    /** Collects alerts in memory — tests and local runs. */
+    /** Collects alerts in memory — tests and local runs. Safe to share
+      * between concurrent pipeline jobs.
+      */
     final class Buffering extends Notifier {
-      val alerts = scala.collection.mutable.ArrayBuffer.empty[Alert]
-      def send(alert: Alert): Unit = alerts += alert
+      private val buf = scala.collection.mutable.ArrayBuffer.empty[Alert]
+      def send(alert: Alert): Unit = synchronized { buf += alert; () }
+      def alerts: Seq[Alert] = synchronized(buf.toSeq)
     }
     /** Default transport: structured line to stderr. */
     val logging: Notifier = (a: Alert) => System.err.println(

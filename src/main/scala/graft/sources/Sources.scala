@@ -126,23 +126,17 @@ object Sinks {
     * ONLY the partitions present in `df`, leaving the rest of the table
     * untouched — re-running a day's job is safe (same output, no
     * duplicates), which is the batch-job idempotency story at 100 TB where
-    * full-table overwrite is impossible.
+    * full-table overwrite is impossible. The mode is a per-write option
+    * (read ahead of the session conf), so concurrent writes on the same
+    * session keep their own overwrite semantics.
     */
   def parquetOverwritePartitions(df: DataFrame, path: String,
-      partitionCols: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      df.write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionCols: _*)
-        .option("compression", "snappy")
-        .parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+      partitionCols: Seq[String]): Unit =
+    df.write.mode(SaveMode.Overwrite)
+      .partitionBy(partitionCols: _*)
+      .option("partitionOverwriteMode", "dynamic")
+      .option("compression", "snappy")
+      .parquet(path)
 
   /** S4/O3: single-file JSON (reports are small; coalesce(1) is correct ONLY
     * for driver-scale outputs like quality summaries — never for data).

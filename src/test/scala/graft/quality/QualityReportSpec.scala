@@ -82,4 +82,15 @@ class QualityReportSpec extends SparkSpec {
     assert(a.failedChecks.toSet === Set("null_check", "duplicate_check", "range_check"))
     assert(a.overallScore === repBad.overallScore)
   }
+
+  test("the buffering notifier keeps every alert sent from concurrent jobs") {
+    val n = new QualityReport.Notifier.Buffering
+    val senders = (1 to 4).map(t => new Thread(() => (1 to 500).foreach(i =>
+      n.send(QualityReport.Alert(s"t$t", "warning", i.toDouble, Seq.empty)))))
+    senders.foreach(_.start())
+    senders.foreach(_.join())
+    assert(n.alerts.size === 2000)
+    assert(n.alerts.groupBy(_.table).map { case (t, as) => t -> as.size } ===
+      (1 to 4).map(t => s"t$t" -> 500).toMap)
+  }
 }

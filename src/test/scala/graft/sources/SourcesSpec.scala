@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
@@ -125,6 +126,40 @@ class SourcesSpec extends SparkSpec {
     val back = spark.read.parquet(s"$dir/t")
     assert(back.count() === 2)
     assert(back.select("id").collect().map(_.getInt(0)).toSet === Set(1, 3))
+  }
+
+  test("dynamic overwrite is per write: the session conf and other writes stay static") {
+    val dir = tmp()
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(key)
+    // the overwrite mode the write's own tasks see in the session conf
+    val modeSeen = udf(() => SQLConf.get.partitionOverwriteMode.toString).asNondeterministic()
+    def rows(ids: (Int, String)*) = Sinks.withDatePartitions(
+      ids.toDF("id", "d").withColumn("d", col("d").cast("date")), "d")
+      .withColumn("mode_seen", modeSeen())
+    def read(path: String, c: String) = spark.read.parquet(path).select(c).collect().toSet
+    try {
+      for (userValue <- Seq(None, Some("STATIC"))) {
+        userValue match {
+          case Some(v) => spark.conf.set(key, v)
+          case None    => spark.conf.unset(key)
+        }
+        val set = spark.conf.getOption(key)
+        val t = s"$dir/t_${userValue.getOrElse("unset")}"
+        Sinks.parquetOverwritePartitions(rows(1 -> "2000-01-05", 2 -> "2000-02-06"),
+          t, Seq("year", "month"))
+        Sinks.parquetOverwritePartitions(rows(3 -> "2000-02-07"), t, Seq("year", "month"))
+        assert(spark.conf.getOption(key) === set) // untouched after the call
+        assert(read(t, "mode_seen").map(_.getString(0)) === Set("STATIC")) // and during it
+        assert(read(t, "id").map(_.getInt(0)) === Set(1, 3)) // dynamic: month=1 survives
+        // a plain partitioned overwrite right after stays a full replace
+        Sinks.parquetPartitioned(rows(4 -> "2000-03-01"), t, Seq("year", "month"))
+        assert(read(t, "id").map(_.getInt(0)) === Set(4))
+      }
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
   }
 
   test("json single-file sink writes exactly one part file") {
