@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SessionArtifacts, Tables}
 
 /** Session-memoized near-duplicate pair graph.
   *
@@ -31,11 +31,11 @@ import graft.core.Tables
 object PairGraph {
   /** Banded-MinHash near-dup pairs (doc_a, doc_b, jaccard) over
     * `documents` in `dataDir`, materialized once per session per
-    * parameterization (via [[graft.core.Materialize]]).
+    * parameterization (via [[graft.core.SessionArtifacts]]).
     */
   def documentsPairs(spark: SparkSession, dataDir: String, n: Int,
       minJaccard: Double = 0.5, numHashTables: Int = 8): DataFrame =
-    graft.core.Materialize.once(spark,
+    SessionArtifacts.parquet(spark,
       s"pairs|$dataDir|$n|$minJaccard|$numHashTables") {
       Dedup.jaccardPairsScalable(Tables(spark, dataDir).documents, "doc_id",
         n = n, minJaccard = minJaccard, numHashTables = numHashTables)
@@ -56,7 +56,7 @@ object PairGraph {
     */
   def documentsShingleStats(spark: SparkSession, dataDir: String,
       n: Int): DataFrame =
-    graft.core.Materialize.once(spark, s"shstats|$dataDir|$n") {
+    SessionArtifacts.parquet(spark, s"shstats|$dataDir|$n") {
       Dedup.shingles(Tables(spark, dataDir).documents, "doc_id", n = n)
         .groupBy("shingle")
         .agg(org.apache.spark.sql.functions.count(
@@ -154,7 +154,7 @@ object PairGraph {
     */
   def documentsHashedShingles(spark: SparkSession, dataDir: String,
       n: Int): DataFrame =
-    graft.core.Materialize.once(spark, s"hshingles|$dataDir|$n") {
+    SessionArtifacts.parquet(spark, s"hshingles|$dataDir|$n") {
       Dedup.hashedShingleArrays(Tables(spark, dataDir).documents, "doc_id",
         n = n)
     }
@@ -256,7 +256,7 @@ object PairGraph {
     * (xxhash64 votes), so reading ≡ recomputing.
     */
   def documentsSimHash(spark: SparkSession, dataDir: String): DataFrame =
-    graft.core.Materialize.once(spark, s"simhash|$dataDir") {
+    SessionArtifacts.parquet(spark, s"simhash|$dataDir") {
       Dedup.simHash(Tables(spark, dataDir).documents, "doc_id")
     }
 }

@@ -6,14 +6,14 @@ import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
 /** In-process pipeline DAG runner with the reference's control-plane
-  * semantics: dependency-ordered execution, bounded retries with
-  * exponential backoff, and a per-job circuit breaker.
+  * semantics: dependency-ordered execution and bounded retries with
+  * exponential backoff; a job whose retries run out lands in the
+  * dead-letter queue.
   *
   * Mirrors reference/lambda/pipeline_orchestrator/lambda_function.py:283-497
   * (ready-job selection = all dependencies completed) and
   * reference/lambda/snowflake_extractor/error_handler.py:267-470 (retry
-  * strategy: max 3 attempts, exp backoff base 1s cap 60s; circuit breaker:
-  * open after 5 failures, half-open after recovery timeout).
+  * strategy: max 3 attempts, exp backoff base 1s cap 60s).
   *
   * The runner is driver-side control flow ONLY — each job body is expected
   * to launch distributed Spark work; nothing here touches data. Ready jobs
@@ -93,26 +93,6 @@ object Pipeline {
       import spark.implicits._
       spark.read.json(spark.createDataset(entries()))
     }
-  }
-
-  /** Circuit breaker: open after `failureThreshold` consecutive failures,
-    * half-open (one trial allowed) after `recoveryMs`.
-    */
-  final class CircuitBreaker(failureThreshold: Int = 5, recoveryMs: Long = 60000,
-      now: () => Long = () => System.currentTimeMillis()) {
-    private var failures = 0
-    private var openedAt: Option[Long] = None
-
-    def allow(): Boolean = openedAt match {
-      case None    => true
-      case Some(t) => now() - t >= recoveryMs // half-open trial
-    }
-    def onSuccess(): Unit = { failures = 0; openedAt = None }
-    def onFailure(): Unit = {
-      failures += 1
-      if (failures >= failureThreshold) openedAt = Some(now())
-    }
-    def isOpen: Boolean = !allow()
   }
 
   def runWithRetry[T](policy: RetryPolicy)(body: () => T): Try[T] = {

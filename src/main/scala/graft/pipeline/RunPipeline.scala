@@ -14,7 +14,7 @@ import graft.sources.Sinks
   * bronze → silver (3 jobs) → gold (3 jobs) over a data directory with
   * partitioned parquet writes, single-pass quality gates with row-level
   * quarantine, per-table quality-report JSON, at-least-once watermark
-  * commit, and the DAG runner's retry/breaker/DLQ control plane.
+  * commit, and the DAG runner's retry/DLQ control plane.
   *
   * This is the composition the reference ships as its top-level artifacts:
   * each silver job mirrors the glue template `main()` (read → clean →
@@ -69,29 +69,6 @@ object RunPipeline {
       quality: Map[String, QualityReport.Report],
       gateCounts: Map[String, (Long, Long)])
 
-  /** One-pass quality gate + dual write (the S8 quarantine contract, kept
-    * partitioned): rows passing `rowPredicate` land in `cleanPath` via
-    * dynamic partition overwrite (idempotent re-runs), the rest land in
-    * `quarantinePath` with a machine-readable reason. The tagged frame is
-    * cached so the split costs ONE evaluation of the upstream plan, not
-    * two.
-    */
-  private def gatedWrite(df: DataFrame, rowPredicate: org.apache.spark.sql.Column,
-      partitionCols: Seq[String], cleanPath: String, quarantinePath: String,
-      reason: String): (Long, Long) = {
-    val tagged = df.withColumn("_pass", rowPredicate).cache()
-    try {
-      val clean = tagged.filter(col("_pass")).drop("_pass")
-      val bad = tagged.filter(!col("_pass") || col("_pass").isNull).drop("_pass")
-        .withColumn("quarantine_reason", lit(reason))
-      if (partitionCols.isEmpty)
-        clean.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(cleanPath)
-      else Sinks.parquetOverwritePartitions(clean, cleanPath, partitionCols)
-      bad.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(quarantinePath)
-      (clean.count(), bad.count())
-    } finally { tagged.unpersist(); () }
-  }
-
   /** The quality report as a 1-row frame for the single-file JSON sink —
     * mirrors the glue template's `write_quality_metrics`
     * (bronze_to_silver_orders.py:360-378).
@@ -137,9 +114,10 @@ object RunPipeline {
     def silverJob(table: String, cleaned: DataFrame, cfg: QualityReport.Config,
         gate: org.apache.spark.sql.Column, partitionCols: Seq[String]): Unit = {
       val rep = QualityReport.runWithAlerts(cleaned, cfg, table, notifier, conf)
-      val (ok, bad) = gatedWrite(cleaned, gate, partitionCols,
+      val (ok, bad) = Sinks.quarantine(cleaned, gate,
         lay.silver(table), lay.quarantine(table),
-        if (rep.passed) s"row_gate:$table" else rep.failedChecks.mkString(","))
+        if (rep.passed) s"row_gate:$table" else rep.failedChecks.mkString(","),
+        partitionCols)
       Sinks.jsonSingleFile(reportDf(spark, table, rep, ok, bad), lay.quality(table))
       quality(table) = rep
       gates(table) = (ok, bad)

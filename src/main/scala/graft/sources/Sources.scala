@@ -264,17 +264,29 @@ object Sinks {
     ok
   }
 
+  /** S8: one-pass quality gate + dual write. Rows passing `rowPredicate`
+    * land in `cleanPath`, the rest in `quarantinePath` with a
+    * machine-readable reason; returns (clean, quarantined) row counts.
+    * With `partitionCols` the clean side is written by dynamic partition
+    * overwrite ([[parquetOverwritePartitions]]), so re-running an
+    * increment rewrites only the partitions it touches. The tagged frame
+    * is cached so the split costs ONE evaluation of the upstream plan, not
+    * two, and is released even when a write throws.
+    */
   def quarantine(df: DataFrame, rowPredicate: org.apache.spark.sql.Column,
-      cleanPath: String, quarantinePath: String, reason: String): (Long, Long) = {
+      cleanPath: String, quarantinePath: String, reason: String,
+      partitionCols: Seq[String] = Seq.empty): (Long, Long) = {
     val tagged = df.withColumn("_pass", rowPredicate).cache()
-    val clean = tagged.filter(col("_pass")).drop("_pass")
-    val bad = tagged.filter(!col("_pass") || col("_pass").isNull).drop("_pass")
-      .withColumn("quarantine_reason", lit(reason))
-    clean.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(cleanPath)
-    bad.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(quarantinePath)
-    val counts = (clean.count(), bad.count())
-    tagged.unpersist()
-    counts
+    try {
+      val clean = tagged.filter(col("_pass")).drop("_pass")
+      val bad = tagged.filter(!col("_pass") || col("_pass").isNull).drop("_pass")
+        .withColumn("quarantine_reason", lit(reason))
+      if (partitionCols.isEmpty)
+        clean.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(cleanPath)
+      else parquetOverwritePartitions(clean, cleanPath, partitionCols)
+      bad.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(quarantinePath)
+      (clean.count(), bad.count())
+    } finally { tagged.unpersist(); () }
   }
 }
 

@@ -1,37 +1,36 @@
 package graft.core
 
+import java.nio.file.{Files, Path}
+
 import graft.SparkSpec
 
-/** Hygiene contract of [[Materialize]]: dirs are memoized while live and
-  * removed by close(); a post-close request rebuilds.
+/** Materialization contract of [[SessionArtifacts.parquet]]: a dir is
+  * memoized per key while live and removed by close(); a post-close request
+  * rebuilds.
   */
 class MaterializeSpec extends SparkSpec {
+
+  private def exists(d: String) = Files.exists(Path.of(d))
 
   test("once memoizes per key, close removes dirs, post-close rebuilds") {
     import spark.implicits._
     var builds = 0
     def build() = { builds += 1; Seq((1, "a"), (2, "b")).toDF("k", "v") }
 
-    val before = Materialize.livePaths.toSet
-    val a = Materialize.once(spark, "spec|memo")(build())
-    assert(a.count() == 2)
-    val b = Materialize.once(spark, "spec|memo")(build())
-    assert(b.count() == 2)
+    val before = SessionArtifacts.liveDirs.toSet
+    assert(SessionArtifacts.parquet(spark, "spec|memo")(build()).count() == 2)
+    assert(SessionArtifacts.parquet(spark, "spec|memo")(build()).count() == 2)
     assert(builds == 1, "second request must read the materialization")
 
-    val created = (Materialize.livePaths.toSet -- before).toSeq
-    assert(created.nonEmpty)
-    created.foreach(p => assert(java.nio.file.Files.exists(java.nio.file.Paths.get(p))))
+    val created = (SessionArtifacts.liveDirs.toSet -- before).toSeq
+    assert(created.size == 1 && exists(created.head))
 
-    Materialize.close()
-    created.foreach(p => assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p)),
-      s"close() must delete $p"))
-    assert(Materialize.livePaths.isEmpty)
+    SessionArtifacts.close()
+    assert(!exists(created.head), s"close() must delete ${created.head}")
+    assert(SessionArtifacts.liveDirs.isEmpty)
 
-    // post-close rebuild: the key is gone from the memo, so once() recomputes
-    val c = Materialize.once(spark, "spec|memo")(build())
-    assert(c.count() == 2)
+    assert(SessionArtifacts.parquet(spark, "spec|memo")(build()).count() == 2)
     assert(builds == 2)
-    Materialize.close()
+    SessionArtifacts.close()
   }
 }

@@ -56,20 +56,6 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("circuit breaker opens after threshold and half-opens after recovery") {
-    var now = 0L
-    val cb = new CircuitBreaker(failureThreshold = 3, recoveryMs = 1000, now = () => now)
-    assert(cb.allow())
-    (1 to 3).foreach(_ => cb.onFailure())
-    assert(cb.isOpen)
-    now = 500
-    assert(!cb.allow())
-    now = 1001
-    assert(cb.allow()) // half-open trial
-    cb.onSuccess()
-    assert(!cb.isOpen && cb.allow())
-  }
-
   test("exhausted-retry failure lands in the DLQ with name, attempts and error payload") {
     val dlqPath = java.nio.file.Files.createTempDirectory("dlq").resolve("dlq.jsonl").toString
     val dlq = new DeadLetterQueue(dlqPath, now = () => 1700000000000L)

@@ -186,6 +186,23 @@ class SourcesSpec extends SparkSpec {
     assert((nClean, nBad) === ((1L, 2L)))
     val bad = spark.read.parquet(s"$dir/quarantine")
     assert(bad.select("quarantine_reason").distinct().head.getString(0) === "amount_range")
+
+    // partitioned: the clean side overwrites only the partitions it holds
+    Seq((0, 5.0, 2020)).toDF("id", "amount", "y")
+      .write.partitionBy("y").parquet(s"$dir/pclean")
+    val inc = Seq((4, 7.0, 2021), (5, -3.0, 2021)).toDF("id", "amount", "y")
+    assert(Sinks.quarantine(inc, col("amount") >= 0, s"$dir/pclean",
+      s"$dir/pquarantine", "negative", partitionCols = Seq("y")) === ((1L, 1L)))
+    assert(spark.read.parquet(s"$dir/pclean").orderBy("id").as[(Int, Double, Int)]
+      .collect().toSeq === Seq((0, 5.0, 2020), (4, 7.0, 2021)))
+
+    // a write that throws (its parent path is a file) leaves nothing cached
+    java.nio.file.Files.writeString(java.nio.file.Path.of(dir, "file"), "x")
+    val gate = col("amount").between(0, 1000)
+    intercept[Exception](Sinks.quarantine(df, gate, s"$dir/file/clean",
+      s"$dir/fquarantine", "amount_range"))
+    assert(df.withColumn("_pass", gate).storageLevel ===
+      org.apache.spark.storage.StorageLevel.NONE)
   }
 
   test("write-audit-publish only replaces the target on a passing audit, " +
