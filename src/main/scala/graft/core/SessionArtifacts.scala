@@ -13,7 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * decides how an artifact is built once, found again and deleted:
   *
   *  - [[value]] memoizes a driver-side value per key (collected rows,
-  *    filter bytes, max-rank maps, store handles);
+  *    filter bytes, max-rank maps, store handles), and [[stamped]] one
+  *    that is rebuilt when its stamp changes (a parquet path's schema,
+  *    stamped with the path's file listing);
   *  - [[dir]] memoizes a temp dir written once per key, and [[parquet]] is
   *    its DataFrame form. Parquet, not `.cache()`, survives
   *    `spark.catalog.clearCache()`, which Bench/Verify call between queries
@@ -35,7 +37,7 @@ object SessionArtifacts {
 
   /** Runs `build` at most once however many threads ask; a build that
     * throws leaves the cell unset. */
-  private final class Once(build: () => Any) {
+  private final class Once(val stamp: Any, build: () => Any) {
     lazy val get: Any = build()
   }
 
@@ -48,8 +50,14 @@ object SessionArtifacts {
 
   /** The value built for `key`, running `build` on the first request only.
     * A build that throws is forgotten, so the next request retries it. */
-  def value[A](key: String)(build: => A): A = {
-    val cell = cells.computeIfAbsent(key, _ => new Once(() => build))
+  def value[A](key: String)(build: => A): A = stamped(key, ())(build)
+
+  /** Like [[value]], but a request whose `stamp` differs from the stored
+    * one rebuilds and REPLACES the entry, so a key holds one value however
+    * often its stamp changes. Stamps compare by `==`. */
+  def stamped[A](key: String, stamp: Any)(build: => A): A = {
+    val cell = cells.compute(key, (_, old) =>
+      if (old != null && old.stamp == stamp) old else new Once(stamp, () => build))
     try cell.get.asInstanceOf[A]
     catch { case e: Throwable => cells.remove(key, cell); throw e }
   }
@@ -71,7 +79,7 @@ object SessionArtifacts {
 
   /** `build` written to parquet once per key, read back on every request. */
   def parquet(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    spark.read.parquet(dir(key)(build.write.mode("overwrite").parquet(_)))
+    ParquetIo.read(spark, dir(key)(build.write.mode("overwrite").parquet(_)))
 
   /** A fresh empty temp dir, deleted by [[close]] or at JVM exit. */
   def scratchDir(): String = {
@@ -100,6 +108,9 @@ object SessionArtifacts {
           .foreach(Files.deleteIfExists(_))
     } catch { case _: java.io.IOException => () } // best-effort cleanup
   }
+
+  /** Keys currently held (test visibility). */
+  private[graft] def liveKeys: Seq[String] = cells.keySet.asScala.toSeq
 
   /** Dirs currently handed out (test visibility). */
   private[graft] def liveDirs: Seq[String] = dirs.asScala.toSeq.map(_.toString)

@@ -7,7 +7,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The reference reads "cataloged" tables through Glue's catalog
   * (bronze_to_silver_orders.py:63-80, silver_to_gold_sales_summary.py:67-103);
   * here the catalog IS the directory layout — parquet is self-describing, so
-  * `spark.read.parquet` gives schema inference for free (SURVEY.md §1.3).
+  * the schema comes from the files (SURVEY.md §1.3). Accessors read through
+  * [[ParquetIo.read]]: the schema is inferred once per file listing of a
+  * table, so the many accessor calls a session makes cost a file listing
+  * each, not a footer-reading Spark job.
   * Filters/projections applied downstream are pushed into these scans by
   * Catalyst (PushedFilters / ReadSchema), which is what makes the layer
   * viable at 100 TB: the scan only materializes the columns and row groups a
@@ -21,7 +24,7 @@ final class Tables(val spark: SparkSession, val dir: String) {
 
   def apply(name: String): DataFrame = {
     require(ValidName.matches(name), s"invalid table name: $name")
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetIo.read(spark, s"$dir/$name.parquet")
   }
 
   def lineitem: DataFrame   = apply("lineitem")

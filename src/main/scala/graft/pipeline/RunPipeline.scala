@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{GraftConf, GraftSession, Tables}
+import graft.core.{GraftConf, GraftSession, ParquetIo, Tables}
 import graft.etl.{SilverCustomers, SilverOrders, SilverParts}
 import graft.gold.{CustomerAnalytics, MlFeatures, SalesSummary}
 import graft.incremental.WatermarkStore
@@ -12,8 +12,8 @@ import graft.sources.Sinks
 
 /** The end-to-end medallion pipeline: one invocation runs
   * bronze → silver (3 jobs) → gold (3 jobs) over a data directory with
-  * partitioned parquet writes, single-pass quality gates with row-level
-  * quarantine, per-table quality-report JSON, at-least-once watermark
+  * partitioned parquet writes, quality gates with row-level quarantine,
+  * per-table quality-report JSON, at-least-once watermark
   * commit, and the DAG runner's retry/DLQ control plane.
   *
   * This is the composition the reference ships as its top-level artifacts:
@@ -26,13 +26,20 @@ import graft.sources.Sinks
   *
   * Scale notes: every job body is one composed lazy plan ending in a
   * write — no driver-side row loops; the orders fact flows through a
-  * watermark-filtered scan (predicate pushed to parquet), the quality
-  * gate is a cached single pass deciding both destinations, silver facts
-  * land hive-partitioned by order_year via DYNAMIC partition overwrite so
-  * re-running a day's increment is idempotent (only touched partitions
-  * rewrite — full-table overwrite is impossible at 100 TB), and the
-  * watermark commits AFTER the write ([[graft.incremental.Incremental]]
-  * at-least-once semantics: a crashed run re-reads, never skips).
+  * watermark-filtered scan (predicate pushed to parquet), probed once by
+  * one aggregate for its row count and the mark it will commit. Each
+  * silver table is evaluated ONCE: the cleaned frame is tagged with its
+  * row gate and cached, the quality report over it is one aggregate
+  * action (which also counts the gate's clean and quarantined rows), and
+  * both writes read the cache. Silver facts land hive-partitioned by
+  * order_year via DYNAMIC partition overwrite (only touched partitions
+  * rewrite — full-table overwrite is impossible at 100 TB); the orders
+  * quarantine is partitioned by the watermark the run started from, so
+  * every run's rejects are kept and a replayed run replaces only its own.
+  * The watermark commits AFTER the writes
+  * ([[graft.incremental.Incremental]] at-least-once semantics: a crashed
+  * run re-reads, never skips). Silver is read back through
+  * [[graft.core.ParquetIo.read]], one schema inference per listing.
   *
   * The DAG runner starts each job as soon as its inputs are done: the
   * three silver jobs run concurrently, and each gold job starts the moment
@@ -46,11 +53,17 @@ import graft.sources.Sinks
   *   silver/{orders,customers,parts}/      partitioned parquet
   *   gold/{daily_sales,monthly_sales,customer_analytics,ml_features}/
   *   quality/<table>/                      1-file JSON report per table
-  *   quarantine/<table>/                   gated-out rows + reason
+  *   quarantine/<table>/                   gated-out rows + reason (orders:
+  *                                         one from_watermark= partition per run)
   *   _state/                               watermarks + DLQ
   * }}}
   */
 object RunPipeline {
+
+  /** The orders quarantine is partitioned by the watermark each run
+    * started from; a first load has none and lands in `_full`. */
+  val QuarantineRunCol = "from_watermark"
+  val FullLoad = "_full"
 
   final case class Layout(root: String) {
     def silver(table: String): String = s"$root/silver/$table"
@@ -87,7 +100,7 @@ object RunPipeline {
     * templates open with).
     */
   private def silverOrdersAsFacts(spark: SparkSession, lay: Layout): DataFrame =
-    spark.read.parquet(lay.silver("orders"))
+    ParquetIo.read(spark, lay.silver("orders"))
       .select(col("o_orderkey"), col("o_custkey"),
         col("order_date").cast("string").as("o_orderdate"),
         col("o_totalprice_dec").cast("double").as("o_totalprice"))
@@ -108,30 +121,40 @@ object RunPipeline {
     val quality = scala.collection.concurrent.TrieMap.empty[String, QualityReport.Report]
     val gates = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
 
-    /** Shared silver-job shape: clean → quality(+alerts) → gated dual
-      * write → quality JSON. Returns nothing; results land in the maps.
+    /** Shared silver-job shape: clean → gate tag → one cached frame →
+      * quality report (+alerts), whose one aggregate also counts the gate
+      * → both writes from the cache → quality JSON. Results land in the
+      * maps. `quarantineRun` names the run's quarantine partition.
       */
     def silverJob(table: String, cleaned: DataFrame, cfg: QualityReport.Config,
-        gate: org.apache.spark.sql.Column, partitionCols: Seq[String]): Unit = {
-      val rep = QualityReport.runWithAlerts(cleaned, cfg, table, notifier, conf)
-      val (ok, bad) = Sinks.quarantine(cleaned, gate,
-        lay.silver(table), lay.quarantine(table),
-        if (rep.passed) s"row_gate:$table" else rep.failedChecks.mkString(","),
-        partitionCols)
-      Sinks.jsonSingleFile(reportDf(spark, table, rep, ok, bad), lay.quality(table))
-      quality(table) = rep
-      gates(table) = (ok, bad)
+        gate: org.apache.spark.sql.Column, partitionCols: Seq[String],
+        quarantineRun: Option[String] = None): Unit = {
+      val tagged = cleaned.withColumn(Sinks.PassCol, gate).cache()
+      try {
+        val rep = QualityReport.runWithAlerts(tagged,
+          cfg.copy(rowGate = Some(col(Sinks.PassCol))), table, notifier, conf)
+        val (ok, bad) = rep.gateCounts.get
+        Sinks.writeSplit(tagged, lay.silver(table), lay.quarantine(table),
+          if (rep.passed) s"row_gate:$table" else rep.failedChecks.mkString(","),
+          bad, partitionCols, quarantineRun.map(QuarantineRunCol -> _))
+        Sinks.jsonSingleFile(reportDf(spark, table, rep, ok, bad), lay.quality(table))
+        quality(table) = rep
+        gates(table) = (ok, bad)
+      } finally { tagged.unpersist(); () }
     }
 
     val jobs = Seq(
       Pipeline.Job("bronze_to_silver_orders")(() => {
         // Incremental: only rows past the committed high-water mark (the
         // predicate pushes into the parquet scan); first run = full load.
-        val incr = store.get("orders", "o_orderdate") match {
+        val from = store.get("orders", "o_orderdate")
+        val incr = from match {
           case Some(mark) => bronze.orders.filter(col("o_orderdate") > mark)
           case None       => bronze.orders
         }
-        if (incr.isEmpty) {
+        // one probe: is there an increment, and the mark it will commit
+        val probe = incr.agg(count(lit(1)), max(col("o_orderdate")).cast("string")).head()
+        if (probe.getLong(0) == 0L) {
           quality.putIfAbsent("orders",
             QualityReport.Report(Seq.empty, 100.0, passed = true, severity = "none"))
           gates.putIfAbsent("orders", (0L, 0L))
@@ -143,11 +166,11 @@ object RunPipeline {
               rangeRules = Seq(DataQuality.RangeRule("o_totalprice_dec",
                 min = Some(0.0)))),
             gate = col("is_complete_order") && col("data_quality_score") >= 0.8,
-            partitionCols = Seq("order_year"))
+            partitionCols = Seq("order_year"),
+            quarantineRun = Some(from.getOrElse(FullLoad)))
           // At-least-once: the mark commits only now, after both writes —
           // a crash above re-reads this increment on the next run.
-          val mark = incr.agg(max(col("o_orderdate")).cast("string")).head.getString(0)
-          Option(mark).foreach(store.put("orders", "o_orderdate", _))
+          Option(probe.getString(1)).foreach(store.put("orders", "o_orderdate", _))
         }
       }),
       Pipeline.Job("bronze_to_silver_customers")(() =>
@@ -177,7 +200,7 @@ object RunPipeline {
       }),
       Pipeline.Job("silver_to_gold_customer_analytics",
           dependsOn = Seq("bronze_to_silver_orders", "bronze_to_silver_customers"))(() => {
-        val dim = spark.read.parquet(lay.silver("customers"))
+        val dim = ParquetIo.read(spark, lay.silver("customers"))
           .select(col("c_custkey"), col("c_name"),
             col("segment_standardized").as("c_mktsegment"), col("c_acctbal"))
         val out = CustomerAnalytics.withRfm(

@@ -11,8 +11,12 @@ import graft.core.GraftConf
   * (reference/lambda/data_quality_monitor/lambda_function.py:120-453), which
   * is its main scalability bug. Here every check is a Spark aggregation —
   * and wherever several per-column statistics are needed they are fused into
-  * ONE aggregate pass over the data (no per-column scans), so the whole
-  * quality report is O(1) jobs regardless of column count.
+  * ONE aggregate pass over the data (no per-column scans). Each function
+  * below is one check and one action, for callers that want one check;
+  * [[QualityReport.run]] compiles the null, duplicate, range and freshness
+  * checks into one two-level aggregate from the same expressions, so a whole
+  * report is one action regardless of column or check count (plus one
+  * quantile pass when IQR outliers are asked for).
   */
 object DataQuality {
 
@@ -57,8 +61,13 @@ object DataQuality {
       .map { case (c, i) => s"'$c', _n$i" }.mkString(", ")
     df.agg(aggs.head, aggs.tail: _*)
       .selectExpr(s"stack(${columns.size}, $stackArgs) as (column_name, null_count)", "total")
-      .withColumn("null_pct", round(col("null_count").cast("double") / col("total") * 100.0, 6))
+      .withColumn("null_pct", pct(col("null_count"), col("total")))
   }
+
+  /** `n` as a percentage of `total`, rounded to 6 places: the null and
+    * range checks' score, shared with the fused report. */
+  private[quality] def pct(n: Column, total: Column): Column =
+    round(n.cast("double") / total * 100.0, 6)
 
   /** Q3 duplicate check by key columns. Matches the reference's
     * pandas `duplicated(keep=False)` semantics: counts ALL members of
@@ -78,39 +87,49 @@ object DataQuality {
   final case class RangeRule(column: String, min: Option[Double] = None,
       max: Option[Double] = None, allowed: Option[Seq[String]] = None)
 
+  /** A row breaks `r` (null when the column is null, which counts as no
+    * violation). */
+  private[quality] def violation(r: RangeRule): Column = {
+    val c = col(r.column)
+    Seq(
+      r.min.map(m => c < m),
+      r.max.map(m => c > m),
+      r.allowed.map(vs => !c.isin(vs.map(lit): _*))
+    ).flatten.reduceOption(_ || _).getOrElse(lit(false))
+  }
+
   def rangeCheck(df: DataFrame, rules: Seq[RangeRule]): DataFrame = {
     val aggs = count(lit(1)).as("total") +: rules.zipWithIndex.map { case (r, i) =>
-      val c = col(r.column)
-      val viol: Column = Seq(
-        r.min.map(m => c < m),
-        r.max.map(m => c > m),
-        r.allowed.map(vs => !c.isin(vs.map(lit): _*))
-      ).flatten.reduceOption(_ || _).getOrElse(lit(false))
-      sum(when(viol, 1L).otherwise(0L)).as(s"_v$i")
+      sum(when(violation(r), 1L).otherwise(0L)).as(s"_v$i")
     }
     val stackArgs = rules.zipWithIndex
       .map { case (r, i) => s"'${r.column}', _v$i" }.mkString(", ")
     df.agg(aggs.head, aggs.tail: _*)
       .selectExpr(s"stack(${rules.size}, $stackArgs) as (column_name, violations)", "total")
-      .withColumn("violation_pct", round(col("violations").cast("double") / col("total") * 100.0, 6))
+      .withColumn("violation_pct", pct(col("violations"), col("total")))
   }
 
   /** Q5 freshness: max timestamp + age vs the injected as-of instant
     * (never wall-clock — GraftConf keeps it deterministic).
     */
-  def freshness(df: DataFrame, tsCol: String, conf: GraftConf = GraftConf.default): DataFrame = {
-    // String literal + to_timestamp: interpreted in the SESSION time zone
-    // (UTC), not the JVM default zone — java.sql.Timestamp.valueOf would
-    // silently shift if the JVM TZ differed from UTC.
+  def freshness(df: DataFrame, tsCol: String, conf: GraftConf = GraftConf.default): DataFrame =
+    df.agg(max(col(tsCol)).as("max_ts"))
+      .withColumn("age_seconds", ageSeconds(col("max_ts"), conf))
+      .select(col("age_seconds").cast("long").as("age_seconds"),
+        ageHours(col("age_seconds")).as("age_hours"))
+
+  /** Seconds from `maxTs` to the as-of instant. The string literal +
+    * to_timestamp is interpreted in the SESSION time zone (UTC), not the
+    * JVM default zone — java.sql.Timestamp.valueOf would silently shift if
+    * the JVM TZ differed from UTC. */
+  private[quality] def ageSeconds(maxTs: Column, conf: GraftConf): Column = {
     val asOfStr = conf.asOfTimestamp.format(
       java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
-    val asOf = to_timestamp(lit(asOfStr))
-    df.agg(max(col(tsCol)).as("max_ts"))
-      .withColumn("age_seconds",
-        unix_timestamp(asOf) - unix_timestamp(col("max_ts")))
-      .withColumn("age_hours", floor(col("age_seconds") / 3600).cast("long"))
-      .select(col("age_seconds").cast("long").as("age_seconds"), col("age_hours"))
+    unix_timestamp(to_timestamp(lit(asOfStr))) - unix_timestamp(maxTs)
   }
+
+  private[quality] def ageHours(ageSeconds: Column): Column =
+    floor(ageSeconds / 3600).cast("long")
 
   /** Q6 IQR outlier detection with EXACT percentiles
     * (lambda_function.py:391-453). Exact `percentile` keeps oracle parity;

@@ -267,26 +267,54 @@ object Sinks {
   /** S8: one-pass quality gate + dual write. Rows passing `rowPredicate`
     * land in `cleanPath`, the rest in `quarantinePath` with a
     * machine-readable reason; returns (clean, quarantined) row counts.
-    * With `partitionCols` the clean side is written by dynamic partition
-    * overwrite ([[parquetOverwritePartitions]]), so re-running an
-    * increment rewrites only the partitions it touches. The tagged frame
-    * is cached so the split costs ONE evaluation of the upstream plan, not
-    * two, and is released even when a write throws.
+    * The tagged frame is cached, so the counts (one aggregate) and both
+    * writes cost ONE evaluation of the upstream plan, and it is released
+    * even when a write throws. The writes are [[writeSplit]]'s.
     */
   def quarantine(df: DataFrame, rowPredicate: org.apache.spark.sql.Column,
       cleanPath: String, quarantinePath: String, reason: String,
       partitionCols: Seq[String] = Seq.empty): (Long, Long) = {
-    val tagged = df.withColumn("_pass", rowPredicate).cache()
+    val tagged = df.withColumn(PassCol, rowPredicate).cache()
     try {
-      val clean = tagged.filter(col("_pass")).drop("_pass")
-      val bad = tagged.filter(!col("_pass") || col("_pass").isNull).drop("_pass")
-        .withColumn("quarantine_reason", lit(reason))
-      if (partitionCols.isEmpty)
-        clean.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(cleanPath)
-      else parquetOverwritePartitions(clean, cleanPath, partitionCols)
-      bad.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(quarantinePath)
-      (clean.count(), bad.count())
+      val r = tagged.agg(count(lit(1)), sum(when(col(PassCol), 1L).otherwise(0L))).head()
+      val ok = if (r.isNullAt(1)) 0L else r.getLong(1)
+      val bad = r.getLong(0) - ok
+      writeSplit(tagged, cleanPath, quarantinePath, reason, bad, partitionCols)
+      (ok, bad)
     } finally { tagged.unpersist(); () }
+  }
+
+  /** The gate column of a frame [[writeSplit]] splits: true passes, false
+    * or null is quarantined. */
+  val PassCol = "_pass"
+
+  /** The two writes of a quality gate, over a frame that carries the gate
+    * as [[PassCol]] (cache it: both sides read it). With `partitionCols`
+    * the clean side is written by dynamic partition overwrite
+    * ([[parquetOverwritePartitions]]), so re-running an increment rewrites
+    * only the partitions it touches. The quarantine side replaces the whole
+    * quarantine, unless `runPartition` = (column, value) names the run:
+    * then the rejects land in that one partition by dynamic overwrite, so
+    * each run adds its own partition, a replay of a run replaces only that
+    * partition, and a run with no `rejects` (the count of failing rows)
+    * writes nothing there.
+    */
+  def writeSplit(tagged: DataFrame, cleanPath: String, quarantinePath: String,
+      reason: String, rejects: Long, partitionCols: Seq[String] = Seq.empty,
+      runPartition: Option[(String, String)] = None): Unit = {
+    val clean = tagged.filter(col(PassCol)).drop(PassCol)
+    val bad = tagged.filter(!col(PassCol) || col(PassCol).isNull).drop(PassCol)
+      .withColumn("quarantine_reason", lit(reason))
+    if (partitionCols.isEmpty)
+      clean.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(cleanPath)
+    else parquetOverwritePartitions(clean, cleanPath, partitionCols)
+    runPartition match {
+      case None =>
+        bad.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(quarantinePath)
+      case Some((c, v)) if rejects != 0 =>
+        parquetOverwritePartitions(bad.withColumn(c, lit(v)), quarantinePath, Seq(c))
+      case _ => ()
+    }
   }
 }
 

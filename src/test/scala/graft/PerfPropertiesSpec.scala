@@ -45,7 +45,7 @@ class PerfPropertiesSpec extends SparkSpec {
   }
 
   test("parquet write is not slower than JSON write at 50k rows") {
-    val dir = java.nio.file.Files.createTempDirectory("perfprop").toString
+    val dir = tempDir("perfprop")
     val df = syntheticOrders(50000).cache()
     df.count()
     // warm both writers once

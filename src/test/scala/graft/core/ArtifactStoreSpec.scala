@@ -12,7 +12,7 @@ class ArtifactStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpRoot() =
-    java.nio.file.Files.createTempDirectory("graft-artifacts").toString
+    tempDir("graft-artifacts")
 
   test("commit writes the marker LAST; torn versions are invisible") {
     val root = tmpRoot()

@@ -177,7 +177,7 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     // production mode: lineage truncation goes through checkpoint() to a
     // filesystem dir (survives executor loss), not localCheckpoint
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = tempDir("graft-ckpt")
     val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val labels = Dedup.dedupClusters(pairs, checkpointDir = Some(ckpt)).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster_id")).toMap

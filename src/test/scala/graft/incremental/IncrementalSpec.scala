@@ -7,7 +7,7 @@ class IncrementalSpec extends SparkSpec {
   import spark.implicits._
 
   test("watermark store persists and updates marks") {
-    val dir = java.nio.file.Files.createTempDirectory("wmspec").toString
+    val dir = tempDir("wmspec")
     val store = new WatermarkStore(dir)
     assert(store.get("t", "c").isEmpty)
     store.put("t", "c", "2024-01-01")
@@ -41,7 +41,7 @@ class IncrementalSpec extends SparkSpec {
     val batches = Incremental.rangeBatches(df, "wm", 4)
     assert(batches.map(_.count()).sum === 100L)
     assert(batches.forall(_.count() > 0))
-    val dir = java.nio.file.Files.createTempDirectory("wmspec-ntz").toString
+    val dir = tempDir("wmspec-ntz")
     val store = new WatermarkStore(dir)
     val out = Incremental.runBatched(df, "t", "wm", 4, store)(b =>
       b.agg(count(lit(1)).as("n")))
@@ -51,7 +51,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("runBatched processes every row once and commits the final mark") {
-    val dir = java.nio.file.Files.createTempDirectory("wmspec2").toString
+    val dir = tempDir("wmspec2")
     val store = new WatermarkStore(dir)
     val df = (1 to 100).map(_.toDouble).toDF("wm")
     val out = Incremental.runBatched(df, "t", "wm", 4, store)(b =>
@@ -62,7 +62,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("runBatchedAtLeastOnce commits AFTER each write; a failed batch " +
       "leaves the store at the last successful batch's mark") {
-    val dir = java.nio.file.Files.createTempDirectory("wmspec4").toString
+    val dir = tempDir("wmspec4")
     val store = new WatermarkStore(dir)
     val df = (1 to 100).map(_.toDouble).toDF("wm")
     // Batch 3 (of 4) fails mid-write: its rows were partially "uploaded"
@@ -101,7 +101,7 @@ class IncrementalSpec extends SparkSpec {
         counter.incrementAndGet()
     }
     def setupJobs(batches: Int): Int = {
-      val dir = java.nio.file.Files.createTempDirectory(s"wmspec3-$batches").toString
+      val dir = tempDir(s"wmspec3-$batches")
       val store = new WatermarkStore(dir)
       val df = (1 to 1000).map(_.toDouble).toDF("wm")
       spark.sparkContext.addSparkListener(listener)

@@ -21,7 +21,7 @@ class FeatureStoreSpec extends SparkSpec {
   private val ts = java.time.LocalDateTime.parse("2024-03-01T00:00:00")
 
   test("invariant 1: ingest bumps the version by one; latest tracks it") {
-    val root = java.nio.file.Files.createTempDirectory("fsv").toString
+    val root = tempDir("fsv")
     val fs = new FeatureStore(spark, root)
     assert(fs.latestVersion("g").isEmpty)
     val vs = (1 to 3).map { i =>
@@ -37,7 +37,7 @@ class FeatureStoreSpec extends SparkSpec {
 
   test("invariant 2: one lineage record per ingest with that ingest's " +
       "group/version/rows/key") {
-    val root = java.nio.file.Files.createTempDirectory("fsl").toString
+    val root = tempDir("fsl")
     val fs = new FeatureStore(spark, root)
     fs.ingest("cust", Seq((1L, 0.5), (2L, 0.7)).toDF("id", "score"), "id", ts)
     fs.ingest("cust", Seq((1L, 0.6), (2L, 0.8), (3L, 0.9)).toDF("id", "score"), "id", ts)
@@ -58,7 +58,7 @@ class FeatureStoreSpec extends SparkSpec {
 
   test("invariant 3: keyed get returns the latest version's values for " +
       "exactly the requested keys") {
-    val root = java.nio.file.Files.createTempDirectory("fsk").toString
+    val root = tempDir("fsk")
     val fs = new FeatureStore(spark, root)
     fs.ingest("cust", Seq((1L, 0.5), (2L, 0.7)).toDF("id", "score"), "id", ts)
     fs.ingest("cust", Seq((1L, 0.6), (2L, 0.8), (3L, 0.9)).toDF("id", "score"), "id", ts)

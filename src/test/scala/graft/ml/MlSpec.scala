@@ -52,7 +52,7 @@ class MlSpec extends SparkSpec {
   }
 
   test("feature store versions, reads latest, keyed get, lineage") {
-    val root = java.nio.file.Files.createTempDirectory("fs").toString
+    val root = tempDir("fs")
     val fs = new FeatureStore(spark, root)
     val ts = java.time.LocalDateTime.parse("2024-01-01T00:00:00")
     val v1 = fs.ingest("cust_features", Seq((1L, 0.5), (2L, 0.7)).toDF("id", "score"), "id", ts)

@@ -4,10 +4,9 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CyclicBarrier, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import org.scalatest.funsuite.AnyFunSuite
 import Pipeline._
 
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends graft.SparkSpec {
 
   private val fastRetry = RetryPolicy(maxAttempts = 3, baseDelayMs = 1, sleep = _ => ())
   private val once = RetryPolicy(maxAttempts = 1, sleep = _ => ())
@@ -57,7 +56,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("exhausted-retry failure lands in the DLQ with name, attempts and error payload") {
-    val dlqPath = java.nio.file.Files.createTempDirectory("dlq").resolve("dlq.jsonl").toString
+    val dlqPath = tempDir("dlq") + "/dlq.jsonl"
     val dlq = new DeadLetterQueue(dlqPath, now = () => 1700000000000L)
     val report = Pipeline.run(Seq(
       Job("extract")(() => throw new IllegalStateException("upstream gone")),
@@ -77,7 +76,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("DLQ appends across runs and escapes control characters in errors") {
-    val dlqPath = java.nio.file.Files.createTempDirectory("dlq2").resolve("dlq.jsonl").toString
+    val dlqPath = tempDir("dlq2") + "/dlq.jsonl"
     val dlq = new DeadLetterQueue(dlqPath, now = () => 0L)
     dlq.record("j1", 3, new RuntimeException("line1\nline2\t\"quoted\""))
     dlq.record("j2", 1, new RuntimeException(null: String))
@@ -144,7 +143,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("two concurrent exhausted-retry failures both land intact in the DLQ") {
-    val dlqPath = java.nio.file.Files.createTempDirectory("dlq3").resolve("dlq.jsonl").toString
+    val dlqPath = tempDir("dlq3") + "/dlq.jsonl"
     val dlq = new DeadLetterQueue(dlqPath, now = () => 0L)
     val barrier = new CyclicBarrier(2)
     def failTogether(msg: String): Unit = {
@@ -164,7 +163,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("DLQ records from many threads at once stay one intact line each") {
-    val dlqPath = java.nio.file.Files.createTempDirectory("dlq4").resolve("dlq.jsonl").toString
+    val dlqPath = tempDir("dlq4") + "/dlq.jsonl"
     val dlq = new DeadLetterQueue(dlqPath, now = () => 0L)
     val long = "x" * 20000 // larger than one write buffer
     val writers = (1 to 4).map(w => new Thread(() =>

@@ -14,7 +14,7 @@ class RunCurationSpec extends SparkSpec {
   private def fastPolicy = Pipeline.RetryPolicy(sleep = _ => ())
 
   test("full curation run: monotone funnel, exact token reconciliation, epoch shards") {
-    val out = java.nio.file.Files.createTempDirectory("curation-e2e").toString
+    val out = tempDir("curation-e2e")
     val r = RunCuration.run(spark, docsDir, out, policy = fastPolicy)
     assert(r.run.failed.isEmpty && r.run.skipped.isEmpty)
     assert(r.run.succeeded.size === 16)

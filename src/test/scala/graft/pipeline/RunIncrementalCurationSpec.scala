@@ -25,8 +25,8 @@ class RunIncrementalCurationSpec extends SparkSpec {
 
   test("nightly runs: watermark + artifact versions advance, clusters " +
       "stay corpus-complete, idle run is a no-op") {
-    val docsDir = java.nio.file.Files.createTempDirectory("inc-docs").toString
-    val out = java.nio.file.Files.createTempDirectory("inc-out").toString
+    val docsDir = tempDir("inc-docs")
+    val out = tempDir("inc-out")
     def writeDocs(rows: Seq[(Long, String, String, String, Long)]): Unit =
       rows.toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("append").parquet(s"$docsDir/documents.parquet")
@@ -75,8 +75,8 @@ class RunIncrementalCurationSpec extends SparkSpec {
   private def night2 = Seq(mk(21L, t20("a", "z2")), mk(22L, t20("c")))
 
   private def setup(): (String, String) = (
-    java.nio.file.Files.createTempDirectory("inc-docs").toString,
-    java.nio.file.Files.createTempDirectory("inc-out").toString)
+    tempDir("inc-docs"),
+    tempDir("inc-out"))
 
   private def writeDocsTo(docsDir: String,
       rows: Seq[(Long, String, String, String, Long)]): Unit =

@@ -1,7 +1,9 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.incremental.WatermarkStore
 import graft.quality.QualityReport
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** End-to-end medallion integration — mirrors the reference's e2e flow
@@ -16,7 +18,7 @@ class RunPipelineSpec extends SparkSpec {
 
   test("full run lands silver+gold+quality on disk, commits the watermark, " +
       "and a re-run is an idempotent empty increment") {
-    val out = java.nio.file.Files.createTempDirectory("medallion-e2e").toString
+    val out = tempDir("medallion-e2e")
     val r = RunPipeline.run(spark, bronzeDir, out, policy = fastPolicy)
     assert(r.run.failed.isEmpty && r.run.skipped.isEmpty)
     assert(r.run.succeeded.size === 6)
@@ -67,7 +69,7 @@ class RunPipelineSpec extends SparkSpec {
   test("dirty bronze rows are quarantined with a reason and kept out of silver") {
     import spark.implicits._
     // doctored bronze: the sf0.001 tables plus three broken order rows
-    val bronze = java.nio.file.Files.createTempDirectory("medallion-dirty").toString
+    val bronze = tempDir("medallion-dirty")
     val orders = spark.read.parquet(s"$bronzeDir/orders.parquet")
     val broken = Seq(
       (-1L, null.asInstanceOf[java.lang.Long], "1997-01-01", -5.0, "O", "1-URGENT"),
@@ -82,7 +84,7 @@ class RunPipelineSpec extends SparkSpec {
     spark.read.parquet(s"$bronzeDir/customer.parquet").write.parquet(s"$bronze/customer.parquet")
     spark.read.parquet(s"$bronzeDir/part.parquet").write.parquet(s"$bronze/part.parquet")
 
-    val out = java.nio.file.Files.createTempDirectory("medallion-dirty-out").toString
+    val out = tempDir("medallion-dirty-out")
     val notifier = new QualityReport.Notifier.Buffering
     val r = RunPipeline.run(spark, bronze, out, notifier = notifier, policy = fastPolicy)
     assert(r.run.failed.isEmpty)
@@ -100,7 +102,7 @@ class RunPipelineSpec extends SparkSpec {
 
   test("a failing silver write burns retries to the DLQ, skips dependents, " +
       "and does NOT advance the watermark (at-least-once)") {
-    val out = java.nio.file.Files.createTempDirectory("medallion-fail").toString
+    val out = tempDir("medallion-fail")
     // sabotage: the silver/orders TARGET is a plain file, so the
     // partitioned parquet write throws on every attempt
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$out/silver"))
@@ -122,5 +124,46 @@ class RunPipelineSpec extends SparkSpec {
     // next (healed) run re-reads it instead of skipping the data
     val store = new graft.incremental.WatermarkStore(s"$out/_state")
     assert(store.get("orders", "o_orderdate").isEmpty)
+  }
+
+  test("the orders quarantine keeps every run's rejects exactly once, " +
+      "across an increment and a replay of it") {
+    import spark.implicits._
+    // the sf0.01 tables, next to the sf0.001 ones
+    val sf = s"${java.nio.file.Path.of(bronzeDir).getParent}/sf0.01"
+    // every 500th order (in date order) gets a status the gate rejects
+    val orders = spark.read.parquet(s"$sf/orders.parquet")
+      .withColumn("_n", row_number().over(Window.orderBy("o_orderdate", "o_orderkey")))
+      .withColumn("o_orderstatus",
+        when(col("_n") % 500 === 0, lit("X")).otherwise(col("o_orderstatus")))
+      .drop("_n")
+    val firstSlice = orders.filter(col("o_orderdate") <= "1998-06-30")
+    val secondSlice = orders.filter(col("o_orderdate") > "1998-06-30" &&
+      col("o_orderdate") <= "1998-12-31")
+    def rejects(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("o_orderstatus") === "X").select("o_orderkey").as[Long].collect().toSeq
+    val expected = (rejects(firstSlice) ++ rejects(secondSlice)).sorted
+    assert(rejects(firstSlice).nonEmpty && rejects(secondSlice).nonEmpty)
+
+    val bronze = tempDir("medallion-replay")
+    for (t <- Seq("customer", "part"))
+      java.nio.file.Files.copy(java.nio.file.Path.of(s"$sf/$t.parquet"),
+        java.nio.file.Path.of(s"$bronze/$t.parquet"))
+    val out = tempDir("medallion-replay-out")
+    def load(): Unit =
+      assert(RunPipeline.run(spark, bronze, out, policy = fastPolicy).run.failed.isEmpty)
+
+    firstSlice.write.parquet(s"$bronze/orders.parquet")
+    load()
+    val store = new WatermarkStore(s"$out/_state")
+    val firstMark = store.get("orders", "o_orderdate").get
+    secondSlice.write.mode("append").parquet(s"$bronze/orders.parquet")
+    load()
+    // at-least-once replay: the second run's mark is lost, so it re-reads
+    store.put("orders", "o_orderdate", firstMark)
+    load()
+
+    val q = spark.read.parquet(s"$out/quarantine/orders")
+    assert(q.select("o_orderkey").as[Long].collect().toSeq.sorted === expected)
   }
 }

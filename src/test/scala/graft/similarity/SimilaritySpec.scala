@@ -147,7 +147,7 @@ class SimilaritySpec extends SparkSpec {
     val q = Seq(0L, 5L).toDF("vec_id")
     val (books, codes) = Similarity.buildPqIndex(df, "vec_id", m = 4, kCodes = 4, seed = 7L)
     val fresh = canon(Similarity.pqAdcTopKWithIndex(df, "vec_id", books, codes, q, k = 3, m = 4))
-    val dir = java.nio.file.Files.createTempDirectory("vidx").toString
+    val dir = tempDir("vidx")
     VectorIndexStore.savePq(dir, books, codes)
     val (b2, c2) = VectorIndexStore.loadPq(spark, dir)
     assert(canon(Similarity.pqAdcTopKWithIndex(df, "vec_id", b2, c2, q, k = 3, m = 4)) === fresh)
@@ -156,7 +156,7 @@ class SimilaritySpec extends SparkSpec {
       nClusters = 4, m = 4, kCodes = 4, seed = 7L)
     val ifresh = canon(Similarity.ivfPqTopKWithIndex(df, "vec_id", cent, ib, ic, q,
       k = 3, nProbe = 2, m = 4))
-    val dir2 = java.nio.file.Files.createTempDirectory("vidx2").toString
+    val dir2 = tempDir("vidx2")
     VectorIndexStore.saveIvfPq(dir2, cent, ib, ic)
     val (lc, lb, lk) = VectorIndexStore.loadIvfPq(spark, dir2)
     assert(canon(Similarity.ivfPqTopKWithIndex(df, "vec_id", lc, lb, lk, q,

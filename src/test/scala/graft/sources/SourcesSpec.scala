@@ -8,7 +8,7 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("srcspec").toString
+    tempDir("srcspec")
 
   test("multi-format reader round-trips parquet, csv and json") {
     val dir = tmp()
@@ -207,7 +207,7 @@ class SourcesSpec extends SparkSpec {
 
   test("write-audit-publish only replaces the target on a passing audit, " +
       "and audits the bytes actually written") {
-    val dir = java.nio.file.Files.createTempDirectory("wap").toString
+    val dir = tempDir("wap")
     val target = dir + "/table"
     // v1 publishes: audit passes
     assert(Sinks.writeAuditPublish((1 to 10).map(i => (i.toLong, "v1")).toDF("id", "tag"),

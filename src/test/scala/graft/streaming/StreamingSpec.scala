@@ -29,7 +29,7 @@ class StreamingSpec extends SparkSpec {
       (5L, "en", (good + "extra tokens in this one ") * 2, "2024-01-01 10:04:00")
     ).toDF("doc_id", "lang", "text", "ingest_ts")
       .withColumn("ingest_ts", col("ingest_ts").cast("timestamp"))
-    val dir = java.nio.file.Files.createTempDirectory("stream-docs").toString
+    val dir = tempDir("stream-docs")
     docs.write.mode("overwrite").parquet(dir)
     val stream = Streaming.fileStream(spark, dir, docs.schema)
     val out = Streaming.runToMemory(
@@ -42,7 +42,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file stream + watermarked window aggregation over AvailableNow") {
-    val dir = java.nio.file.Files.createTempDirectory("stream-in").toString
+    val dir = tempDir("stream-in")
     writeEvents(dir)
     val schema = spark.read.parquet(dir).schema
     val stream = Streaming.fileStream(spark, dir, schema)
@@ -60,7 +60,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming dedup drops duplicate event ids within the watermark") {
-    val dir = java.nio.file.Files.createTempDirectory("stream-in2").toString
+    val dir = tempDir("stream-in2")
     writeEvents(dir)
     val schema = spark.read.parquet(dir).schema
     val stream = Streaming.fileStream(spark, dir, schema)
@@ -70,9 +70,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("foreachBatch upsert: last write wins per key across batches") {
-    val in = java.nio.file.Files.createTempDirectory("ups-in").toString
-    val target = java.nio.file.Files.createTempDirectory("ups-t").toString + "/state"
-    val ckpt = java.nio.file.Files.createTempDirectory("ups-c").toString
+    val in = tempDir("ups-in")
+    val target = tempDir("ups-t") + "/state"
+    val ckpt = tempDir("ups-c")
     def write(name: String, rows: Seq[(Long, String, String)]): Unit =
       rows.toDF("id", "ts", "v").withColumn("ts", col("ts").cast("timestamp"))
         .coalesce(1).write.mode("append").parquet(in)
@@ -92,10 +92,10 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup ingestion: corpus grows only by novel docs, the " +
       "ledger records batch- and corpus-sourced matches") {
-    val in = java.nio.file.Files.createTempDirectory("ded-in").toString
-    val corpus = java.nio.file.Files.createTempDirectory("ded-c").toString + "/corpus"
-    val ledger = java.nio.file.Files.createTempDirectory("ded-l").toString + "/matches"
-    val ckpt = java.nio.file.Files.createTempDirectory("ded-k").toString
+    val in = tempDir("ded-in")
+    val corpus = tempDir("ded-c") + "/corpus"
+    val ledger = tempDir("ded-l") + "/matches"
+    val ckpt = tempDir("ded-k")
     val phrase = "the quick brown fox jumps over the lazy dog again and again"
     def write(rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in)
@@ -118,10 +118,10 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming pair-graph maintenance: versions commit per batch, the " +
       "final clustering equals a full rebuild over everything ingested") {
-    val in = java.nio.file.Files.createTempDirectory("pgm-in").toString
-    val corpus = java.nio.file.Files.createTempDirectory("pgm-c").toString + "/corpus"
-    val arts = java.nio.file.Files.createTempDirectory("pgm-a").toString + "/artifacts"
-    val ckpt = java.nio.file.Files.createTempDirectory("pgm-k").toString
+    val in = tempDir("pgm-in")
+    val corpus = tempDir("pgm-c") + "/corpus"
+    val arts = tempDir("pgm-a") + "/artifacts"
+    val ckpt = tempDir("pgm-k")
     val tA = "alpha one two three four five six seven eight nine"
     val tB = "bravo uno dos tres cuatro cinco seis siete ocho nueve"
     def write(rows: Seq[(Long, String)]): Unit =
@@ -172,9 +172,9 @@ class StreamingSpec extends SparkSpec {
         Multimodal.videoTemporalHashes(Multimodal.syntheticBaseY4ms(ids2, "doc_id"), "vid_id")))
     for ((grain, night1, night2) <- grains) {
       val keyCol = night1.columns.head
-      val in = java.nio.file.Files.createTempDirectory(s"mfm-in-$grain").toString
-      val root = java.nio.file.Files.createTempDirectory(s"mfm-a-$grain").toString + "/store"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"mfm-k-$grain").toString
+      val in = tempDir(s"mfm-in-$grain")
+      val root = tempDir(s"mfm-a-$grain") + "/store"
+      val ckpt = tempDir(s"mfm-k-$grain")
       night1.coalesce(1).write.mode("append").parquet(in)
       val schema = spark.read.parquet(in).schema
       Streaming.mediaFingerprintMaintenanceStream(
@@ -187,7 +187,7 @@ class StreamingSpec extends SparkSpec {
       // REPLAY: a fresh checkpoint re-delivers the same input as batchId
       // 0 — the mark in the marker metadata must skip the commit, so no
       // new version and no duplicate fingerprint rows
-      val ckptLost = java.nio.file.Files.createTempDirectory(s"mfm-k2-$grain").toString
+      val ckptLost = tempDir(s"mfm-k2-$grain")
       Streaming.mediaFingerprintMaintenanceStream(
         Streaming.fileStream(spark, in, schema), root, ckptLost, keyCol)
       assert(graft.core.ArtifactStore.latestVersion(spark, root) === v1,
@@ -208,8 +208,8 @@ class StreamingSpec extends SparkSpec {
 
   test("pair-graph maintenance replay: a batch whose artifact commit " +
       "landed but whose checkpoint offset did not re-runs exactly-once") {
-    val corpus = java.nio.file.Files.createTempDirectory("pgr-c").toString + "/corpus"
-    val arts = java.nio.file.Files.createTempDirectory("pgr-a").toString + "/artifacts"
+    val corpus = tempDir("pgr-c") + "/corpus"
+    val arts = tempDir("pgr-a") + "/artifacts"
     val tA = "alpha one two three four five six seven eight nine"
     val batch = Seq((1L, tA), (2L, tA)).toDF("doc_id", "text")
     val v1 = Streaming.pairGraphMaintenanceBatch(batch, corpus, arts,
@@ -251,9 +251,9 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming SCD2: changed keys close their version and open a new " +
       "one, history accumulates across micro-batches") {
-    val in = java.nio.file.Files.createTempDirectory("scd-in").toString
-    val target = java.nio.file.Files.createTempDirectory("scd-t").toString + "/dim"
-    val ckpt = java.nio.file.Files.createTempDirectory("scd-c").toString
+    val in = tempDir("scd-in")
+    val target = tempDir("scd-t") + "/dim"
+    val ckpt = tempDir("scd-c")
     def write(rows: Seq[(Long, String, String)]): Unit =
       rows.toDF("id", "segment", "ts").withColumn("ts", col("ts").cast("timestamp"))
         .coalesce(1).write.mode("append").parquet(in)
@@ -285,9 +285,9 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming drift monitor ledgers one PSI row per micro-batch, " +
       "flat for in-distribution batches and loud for a shifted one") {
-    val in = java.nio.file.Files.createTempDirectory("drift-in").toString
-    val ledger = java.nio.file.Files.createTempDirectory("drift-l").toString + "/ledger"
-    val ckpt = java.nio.file.Files.createTempDirectory("drift-c").toString
+    val in = tempDir("drift-in")
+    val ledger = tempDir("drift-l") + "/ledger"
+    val ckpt = tempDir("drift-c")
     val reference = (1 to 1000).map(_.toDouble).toDF("v")
     def write(rows: Seq[Double]): Unit =
       rows.toDF("v").coalesce(1).write.mode("append").parquet(in)
@@ -312,7 +312,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dropDuplicatesWithinWatermark also drops a retry whose timestamp differs") {
-    val dir = java.nio.file.Files.createTempDirectory("stream-in2b").toString
+    val dir = tempDir("stream-in2b")
     Seq(
       (1L, "2024-01-01 10:05:00", 101L, "click", 1.0),
       (1L, "2024-01-01 10:06:30", 101L, "click", 1.0), // redelivery, new ts
@@ -334,7 +334,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("mapGroupsWithState keeps running per-user counts") {
-    val dir = java.nio.file.Files.createTempDirectory("stream-in3").toString
+    val dir = tempDir("stream-in3")
     writeEvents(dir)
     val schema = spark.read.parquet(dir).schema
     val stream = Streaming.fileStream(spark, dir, schema)
@@ -345,7 +345,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-static join enriches micro-batches against a dimension") {
-    val dir = java.nio.file.Files.createTempDirectory("stream-in5").toString
+    val dir = tempDir("stream-in5")
     writeEvents(dir)
     val schema = spark.read.parquet(dir).schema
     val dim = Seq((101L, "alice"), (102L, "bob")).toDF("uid", "name")
@@ -357,9 +357,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("AvailableNow checkpoint resumes without reprocessing (bookmark semantics)") {
-    val in = java.nio.file.Files.createTempDirectory("stream-in4").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("stream-ckpt").toString
-    val sink = java.nio.file.Files.createTempDirectory("stream-out").toString + "/out"
+    val in = tempDir("stream-in4")
+    val ckpt = tempDir("stream-ckpt")
+    val sink = tempDir("stream-out") + "/out"
     writeEvents(in)
     val schema = spark.read.parquet(in).schema
     def runOnce(): Unit = Streaming.runAvailableNow(
@@ -380,9 +380,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("output-mode matrix: Append emits a window only after the watermark passes it") {
-    val in = java.nio.file.Files.createTempDirectory("stream-in6").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("stream-ckpt6").toString
-    val sink = java.nio.file.Files.createTempDirectory("stream-out6").toString + "/out"
+    val in = tempDir("stream-in6")
+    val ckpt = tempDir("stream-ckpt6")
+    val sink = tempDir("stream-out6") + "/out"
     writeEvents(in) // max ts 12:30
     val schema = spark.read.parquet(in).schema
     def runOnce(): Unit = Streaming.runAvailableNow(
@@ -419,7 +419,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("left-outer stream-stream join emits unmatched rows once state expires") {
-    val dir = java.nio.file.Files.createTempDirectory("stream-in7").toString
+    val dir = tempDir("stream-in7")
     def append(rows: (Long, String, Long, String, Double)*): Unit =
       rows.toSeq.toDF("event_id", "ts", "user_id", "event_type", "value")
         .withColumn("ts", col("ts").cast("timestamp"))
@@ -428,8 +428,8 @@ class StreamingSpec extends SparkSpec {
     append((1L, "2024-01-01 10:05:00", 201L, "click", 1.0),
            (2L, "2024-01-01 10:35:00", 202L, "purchase", 9.0))
     val schema = spark.read.parquet(dir).schema
-    val ckpt = java.nio.file.Files.createTempDirectory("stream-ckpt7").toString
-    val sink = java.nio.file.Files.createTempDirectory("stream-out7").toString + "/out"
+    val ckpt = tempDir("stream-ckpt7")
+    val sink = tempDir("stream-out7") + "/out"
     def runOnce(): Unit = {
       def stream() = Streaming.fileStream(spark, dir, schema)
       val clicks = stream().filter(col("event_type") === "click")
@@ -463,7 +463,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-stream windowed join pairs clicks with purchases in the window") {
-    val dir = java.nio.file.Files.createTempDirectory("stream-in5").toString
+    val dir = tempDir("stream-in5")
     // clicks at 10:05 and 11:50 for user 101; purchases at 10:35 (inside the
     // 1h window of the first click) and 13:30 (outside both windows)
     Seq(
@@ -497,7 +497,7 @@ class StreamingSpec extends SparkSpec {
     // unmodified as Complete-mode streaming queries — the incremental
     // corpus-accounting path: each micro-batch revises the cell/register
     // table, no rescan of earlier batches
-    val dir = java.nio.file.Files.createTempDirectory("stream-sk").toString
+    val dir = tempDir("stream-sk")
     def append(rows: (String, String)*): Unit =
       rows.toSeq.toDF("lang", "token").write.mode("append").parquet(dir)
     append(Seq.tabulate(300)(i => ("en", s"tok${i % 90}")): _*)

@@ -32,7 +32,7 @@ class SuffixIndexStoreSpec extends SparkSpec {
   ).toDF("doc_id", "text")
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("sufstore").toString
+    tempDir("sufstore")
 
   private def probeCoverage(st: SuffixIndexStore.Standing,
       batch: DataFrame): Map[Long, (Long, Long, Long)] =
