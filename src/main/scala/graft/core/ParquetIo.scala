@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Parquet reads for the engine's catalogs and pipelines.
   *
@@ -33,12 +33,12 @@ import org.apache.spark.sql.types.StructType
 object ParquetIo {
 
   def read(spark: SparkSession, path: String): DataFrame = {
-    val listing = leafFiles(spark, path)
+    val files = listing(spark, path)
     // no files: let Spark raise its own error (PATH_NOT_FOUND, no schema)
-    if (listing.isEmpty) spark.read.parquet(path)
+    if (files.isEmpty) spark.read.parquet(path)
     else {
       val schema = SessionArtifacts.stamped(
-        s"parquet-schema|${sessionId(spark)}|$path", listing)(spark.read.parquet(path).schema)
+        s"parquet-schema|${sessionId(spark)}|$path", files)(spark.read.parquet(path).schema)
       spark.read.schema(schema).parquet(path)
     }
   }
@@ -59,20 +59,38 @@ object ParquetIo {
   private def sessionId(spark: SparkSession): String =
     sessionIds.computeIfAbsent(spark, _ => java.util.UUID.randomUUID.toString)
 
+  /** The schema `spark.read.parquet` reports for a frame of `schema`
+    * written with `partitionBy(partitionCols)`: every field nullable,
+    * nested ones too, and the partition columns last. A read that passes
+    * it runs no inference job. */
+  def writtenSchema(schema: StructType, partitionCols: Seq[String] = Seq.empty): StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+      case other => other
+    }
+    val (parts, data) = schema.fields.partition(f => partitionCols.contains(f.name))
+    nullable(StructType(data ++ partitionCols.flatMap(c => parts.find(_.name == c))))
+      .asInstanceOf[StructType]
+  }
+
   /** (file, length, mtime) of every file under `path`, sorted; empty when
-    * the path does not exist. */
-  private def leafFiles(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    * the path does not exist. A driver-side listing, not a Spark job. It
+    * walks `listStatus` rather than `listFiles`: a located listing of the
+    * local file system reads each file's owner and permissions, which
+    * without Hadoop's native library forks a shell command per file. */
+  def listing(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Vector.newBuilder[(String, Long, Long)]
-    try {
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-    } catch { case _: java.io.FileNotFoundException => () }
-    files.result().sorted
+    def walk(dir: Path): Seq[(String, Long, Long)] = fs.listStatus(dir).toSeq.flatMap { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    try walk(p).sorted
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
   }
 
   private def isPathNotFound(e: AnalysisException): Boolean =

@@ -22,10 +22,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final class Tables(val spark: SparkSession, val dir: String) {
   private val ValidName = "[A-Za-z0-9_]+".r
 
-  def apply(name: String): DataFrame = {
+  /** Where table `name` lives under [[dir]]. */
+  def path(name: String): String = {
     require(ValidName.matches(name), s"invalid table name: $name")
-    ParquetIo.read(spark, s"$dir/$name.parquet")
+    s"$dir/$name.parquet"
   }
+
+  def apply(name: String): DataFrame = ParquetIo.read(spark, path(name))
 
   def lineitem: DataFrame   = apply("lineitem")
   def orders: DataFrame     = apply("orders")

@@ -1,6 +1,6 @@
 package graft.incremental
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   *
   *  - [[WatermarkStore]] persists marks as tiny files in a state directory —
   *    state is metadata (one value per table), never data, so driver-side
-  *    file I/O is correct at any scale.
+  *    file I/O is correct at any scale. The same directory holds job
+  *    stamps: what a job last read and wrote, so a rerun over unchanged
+  *    inputs can skip it. Every file is replaced by an atomic rename.
   *  - [[Incremental.batchBoundaries]] replaces LIMIT-pagination with range
   *    predicates on the watermark column: each batch is
   *    `wm > lo AND wm <= hi`, which pushes into the parquet scan
@@ -24,20 +26,46 @@ import org.apache.spark.sql.functions._
 final class WatermarkStore(stateDir: String) {
   Files.createDirectories(Paths.get(stateDir))
 
-  private def path(table: String, column: String): Path = {
-    require("[A-Za-z0-9_]+".r.matches(table) && "[A-Za-z0-9_]+".r.matches(column),
-      s"invalid watermark key: $table/$column")
-    Paths.get(stateDir, s"$table.$column.wm")
+  private val Key = "[A-Za-z0-9_]+".r
+
+  private def path(parts: Seq[String], suffix: String): Path = {
+    require(parts.forall(Key.matches), s"invalid state key: ${parts.mkString("/")}")
+    Paths.get(stateDir, parts.mkString("", ".", suffix))
   }
 
-  def get(table: String, column: String): Option[String] = {
-    val p = path(table, column)
-    if (Files.exists(p)) Some(Files.readString(p).trim) else None
+  private def read(p: Path): Option[String] =
+    if (Files.exists(p)) Some(Files.readString(p)) else None
+
+  /** Replace `p` whole: a reader sees the old value or the new one. */
+  private def write(p: Path, value: String): Unit = {
+    val tmp = Files.createTempFile(p.getParent, s".${p.getFileName}", ".tmp")
+    try {
+      Files.writeString(tmp, value)
+      Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    } finally { Files.deleteIfExists(tmp); () }
   }
+
+  def get(table: String, column: String): Option[String] =
+    read(path(Seq(table, column), ".wm")).map(_.trim)
 
   /** Commit a new high-water mark (last step of a successful batch). */
   def put(table: String, column: String, value: String): Unit =
-    Files.writeString(path(table, column), value)
+    write(path(Seq(table, column), ".wm"), value)
+
+  /** The stamp `job` last committed: named entries, one `name<TAB>value`
+    * line each in `<job>.stamp`. Names and values hold no tab or newline. */
+  def stamp(job: String): Option[Map[String, String]] =
+    read(path(Seq(job), ".stamp")).map(_.linesIterator.filter(_.nonEmpty).map { l =>
+      val i = l.indexOf('\t')
+      l.take(i) -> l.drop(i + 1)
+    }.toMap)
+
+  def putStamp(job: String, entries: Map[String, String]): Unit = {
+    require(entries.forall { case (k, v) => !(k + v).exists(c => c == '\t' || c == '\n') },
+      s"stamp entries of $job hold a tab or newline")
+    write(path(Seq(job), ".stamp"),
+      entries.toSeq.sorted.map { case (k, v) => s"$k\t$v\n" }.mkString)
+  }
 }
 
 object Incremental {

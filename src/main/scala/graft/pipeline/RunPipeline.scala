@@ -1,7 +1,9 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{GraftConf, GraftSession, ParquetIo, Tables}
 import graft.etl.{SilverCustomers, SilverOrders, SilverParts}
@@ -27,7 +29,8 @@ import graft.sources.Sinks
   * Scale notes: every job body is one composed lazy plan ending in a
   * write — no driver-side row loops; the orders fact flows through a
   * watermark-filtered scan (predicate pushed to parquet), probed once by
-  * one aggregate for its row count and the mark it will commit. Each
+  * one aggregate for its row count, the mark it will commit and the
+  * order years it spans (`min`/`max` of the year). Each
   * silver table is evaluated ONCE: the cleaned frame is tagged with its
   * row gate and cached, the quality report over it is one aggregate
   * action (which also counts the gate's clean and quarantined rows), and
@@ -36,10 +39,27 @@ import graft.sources.Sinks
   * rewrite — full-table overwrite is impossible at 100 TB); the orders
   * quarantine is partitioned by the watermark the run started from, so
   * every run's rejects are kept and a replayed run replaces only its own.
-  * The watermark commits AFTER the writes
-  * ([[graft.incremental.Incremental]] at-least-once semantics: a crashed
-  * run re-reads, never skips). Silver is read back through
-  * [[graft.core.ParquetIo.read]], one schema inference per listing.
+  * An increment that lands in an order year silver already holds merges
+  * into it: the year's rows are kept unless the increment re-delivers
+  * their `o_orderkey`, so a mid-year slice keeps the year's earlier rows
+  * and a replayed slice is idempotent. Whether any touched year exists is
+  * decided on the driver from the `order_year=` directories, so an
+  * increment of new years reads nothing back. The watermark commits AFTER
+  * the writes ([[graft.incremental.Incremental]] at-least-once semantics:
+  * a crashed run re-reads, never skips). Gold reads silver with the
+  * schema the silver plan writes ([[silverSchema]]), so no read infers one.
+  *
+  * Incremental beyond the watermark, by one skip rule: after its writes a
+  * job commits a stamp in `_state` — the conf, a digest of the (file,
+  * length, mtime) listing of each input and of its outputs, and for a
+  * silver job its quality report. A later run does no Spark work for an
+  * input whose digest is unchanged. The customers and parts jobs re-clean
+  * only when their bronze file changes, and otherwise return the committed
+  * report and gate counts; `sales_summary` rebuilds, by dynamic partition
+  * overwrite, only the order years whose silver partition changed;
+  * `customer_analytics` and `ml_features` rebuild whole when any input
+  * changed. A job that fails keeps its old stamp and is redone next run.
+  * Each Spark job carries the DAG job that started it as its description.
   *
   * The DAG runner starts each job as soon as its inputs are done: the
   * three silver jobs run concurrently, and each gold job starts the moment
@@ -55,7 +75,9 @@ import graft.sources.Sinks
   *   quality/<table>/                      1-file JSON report per table
   *   quarantine/<table>/                   gated-out rows + reason (orders:
   *                                         one from_watermark= partition per run)
-  *   _state/                               watermarks + DLQ
+  *   _state/<table>.<column>.wm            watermark
+  *   _state/<job>.stamp                    what the job last read and wrote
+  *   _state/dlq.jsonl                      dead-letter queue
   * }}}
   */
 object RunPipeline {
@@ -95,19 +117,66 @@ object RunPipeline {
         "clean_rows", "quarantined_rows")
   }
 
-  /** Silver-orders parquet → the raw-ish fact columns the gold jobs
-    * consume (the conformance select the reference's silver_to_gold
-    * templates open with).
-    */
-  private def silverOrdersAsFacts(spark: SparkSession, lay: Layout): DataFrame =
-    ParquetIo.read(spark, lay.silver("orders"))
-      .select(col("o_orderkey"), col("o_custkey"),
-        col("order_date").cast("string").as("o_orderdate"),
-        col("o_totalprice_dec").cast("double").as("o_totalprice"))
+  /** The schema `spark.read.parquet` reports for a silver table, known from
+    * the plan that writes it; reads that pass it run no inference job. */
+  def silverSchema(table: String, bronze: Tables, conf: GraftConf): StructType = table match {
+    case "orders" =>
+      ParquetIo.writtenSchema(SilverOrders.silver(bronze.orders, conf).schema, Seq("order_year"))
+    case "customers" => ParquetIo.writtenSchema(SilverCustomers.clean(bronze.customer).schema)
+  }
+
+  /** Hex SHA-256 of `lines`. */
+  private def digest(lines: Iterator[String]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    lines.foreach(l => md.update((l + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    md.digest().map(b => f"$b%02x").mkString
+  }
+
+  private def fileLine(f: (String, Long, Long)): String = s"${f._1} ${f._2} ${f._3}"
+
+  /** Digest of the (file, length, mtime) listing of every path. */
+  private def listingDigest(spark: SparkSession, paths: Seq[String]): String =
+    digest(paths.iterator.flatMap(p =>
+      Iterator(p) ++ ParquetIo.listing(spark, p).iterator.map(fileLine)))
+
+  /** The (file, length, mtime) listing of each `column=value` directory
+    * under `path`, keyed by the value; files outside them are left out. */
+  private def partitions(spark: SparkSession, path: String,
+      column: String): Map[String, Seq[(String, Long, Long)]] =
+    ParquetIo.listing(spark, path)
+      .groupBy(f => new Path(f._1).getParent.getName)
+      .collect { case (dir, files) if dir.startsWith(s"$column=") =>
+        dir.stripPrefix(s"$column=") -> files }
+
+  /** A quality report as stamp entries, and back. Doubles print in
+    * round-trip form, so the report read back equals the one computed. */
+  private def reportEntries(rep: QualityReport.Report): Map[String, String] = Map(
+    "report" -> s"${rep.overallScore} ${rep.passed} ${rep.severity}",
+    "checks" -> rep.checks.map(c => s"${c.check}:${c.score}:${c.passed}").mkString(","),
+    "gate" -> rep.gateCounts.fold("")(g => s"${g._1} ${g._2}"))
+
+  private def reportOf(stamp: Map[String, String]): QualityReport.Report = {
+    val Array(score, passed, severity) = stamp("report").split(' ')
+    val checks = stamp("checks").split(',').toSeq.filter(_.nonEmpty).map { c =>
+      val Array(name, s, p) = c.split(':')
+      QualityReport.CheckScore(name, s.toDouble, p.toBoolean)
+    }
+    val gate = stamp("gate").split(' ').toSeq.filter(_.nonEmpty).map(_.toLong) match {
+      case Seq(ok, bad) => Some((ok, bad))
+      case _            => None
+    }
+    QualityReport.Report(checks, score.toDouble, passed.toBoolean, severity, gate)
+  }
+
+  /** Stamp entry names of a job's inputs carry this prefix. */
+  private val InputEntry = "input:"
 
   /** Build and run the whole DAG. Idempotent: a second invocation over the
-    * same `outRoot` sees the committed watermark, reads an empty increment
-    * and leaves silver/gold intact.
+    * same `outRoot` sees the committed watermark, reads an empty increment,
+    * finds every stamp unchanged and starts no Spark job after the orders
+    * probe, leaving silver and gold as they were. Every other run does
+    * Spark work only for the inputs that changed since each job last
+    * committed (the skip rule, `incremental` below).
     */
   def run(spark: SparkSession, bronzeDir: String, outRoot: String,
       conf: GraftConf = GraftConf.default,
@@ -120,15 +189,72 @@ object RunPipeline {
 
     val quality = scala.collection.concurrent.TrieMap.empty[String, QualityReport.Report]
     val gates = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
+    def record(table: String, rep: QualityReport.Report): Unit = {
+      quality(table) = rep
+      gates(table) = rep.gateCounts.get
+    }
+
+    lazy val ordersSchema = silverSchema("orders", bronze, conf)
+    lazy val customersSchema = silverSchema("customers", bronze, conf)
+
+    /** Silver orders, of the given order years only when `years` is set. */
+    def silverOrders(years: Option[Seq[Int]]): DataFrame = {
+      val all = spark.read.schema(ordersSchema).parquet(lay.silver("orders"))
+      years.fold(all)(ys => all.filter(col("order_year").isin(ys: _*)))
+    }
+
+    /** Silver orders → the raw-ish fact columns the gold jobs consume (the
+      * conformance select the reference's silver_to_gold templates open
+      * with). */
+    def silverOrdersAsFacts(years: Option[Seq[Int]] = None): DataFrame =
+      silverOrders(years)
+        .select(col("o_orderkey"), col("o_custkey"),
+          col("order_date").cast("string").as("o_orderdate"),
+          col("o_totalprice_dec").cast("double").as("o_totalprice"))
+
+    /** The one skip rule. `inputs` holds a digest per input, `outputs` lists
+      * the paths the job writes. When the job's stamp in `_state` records
+      * this conf, this listing of the outputs and every input digest, the
+      * job does no work and gets the stamp back. Otherwise `build` runs,
+      * given the inputs that changed (`None` means all of them: there is no
+      * stamp, the conf or the outputs differ, or an input is gone), and the
+      * new stamp, with the entries `build` returns, commits after its
+      * writes: a job that fails leaves the old stamp, so the next run redoes
+      * it (at-least-once, like the watermark). */
+    def incremental(job: String, inputs: Map[String, String], outputs: Seq[String])(
+        build: Option[Set[String]] => Map[String, String]): Map[String, String] = {
+      val prev = store.stamp(job).filter(s => s.get("conf").contains(conf.toString) &&
+        s.get("outputs").contains(listingDigest(spark, outputs)))
+      val changed = prev
+        .map(_.collect { case (k, v) if k.startsWith(InputEntry) => k.stripPrefix(InputEntry) -> v })
+        .filter(_.keySet.subsetOf(inputs.keySet))
+        .map(old => inputs.collect { case (k, v) if !old.get(k).contains(v) => k }.toSet)
+      changed match {
+        case Some(c) if c.isEmpty => prev.get
+        case _ =>
+          val stamp = build(changed) ++ inputs.map { case (k, v) => (InputEntry + k) -> v } +
+            ("conf" -> conf.toString) + ("outputs" -> listingDigest(spark, outputs))
+          store.putStamp(job, stamp)
+          stamp
+      }
+    }
+
+    /** A DAG job whose Spark jobs carry its name as their description. */
+    def job(name: String, dependsOn: String*)(body: => Unit): Pipeline.Job =
+      Pipeline.Job(name, dependsOn)(() => {
+        spark.sparkContext.setJobDescription(name)
+        try body finally spark.sparkContext.setJobDescription(null)
+      })
 
     /** Shared silver-job shape: clean → gate tag → one cached frame →
       * quality report (+alerts), whose one aggregate also counts the gate
-      * → both writes from the cache → quality JSON. Results land in the
-      * maps. `quarantineRun` names the run's quarantine partition.
+      * → both writes from the cache → quality JSON. `quarantineRun` names
+      * the run's quarantine partition; `merge` is [[Sinks.writeSplit]]'s.
       */
     def silverJob(table: String, cleaned: DataFrame, cfg: QualityReport.Config,
         gate: org.apache.spark.sql.Column, partitionCols: Seq[String],
-        quarantineRun: Option[String] = None): Unit = {
+        quarantineRun: Option[String] = None,
+        merge: DataFrame => DataFrame = identity): QualityReport.Report = {
       val tagged = cleaned.withColumn(Sinks.PassCol, gate).cache()
       try {
         val rep = QualityReport.runWithAlerts(tagged,
@@ -136,15 +262,31 @@ object RunPipeline {
         val (ok, bad) = rep.gateCounts.get
         Sinks.writeSplit(tagged, lay.silver(table), lay.quarantine(table),
           if (rep.passed) s"row_gate:$table" else rep.failedChecks.mkString(","),
-          bad, partitionCols, quarantineRun.map(QuarantineRunCol -> _))
+          bad, partitionCols, quarantineRun.map(QuarantineRunCol -> _), merge)
         Sinks.jsonSingleFile(reportDf(spark, table, rep, ok, bad), lay.quality(table))
-        quality(table) = rep
-        gates(table) = (ok, bad)
+        rep
       } finally { tagged.unpersist(); () }
     }
 
+    /** A dimension's silver job re-cleans only when its bronze file
+      * changed; otherwise it reports what it committed last time. */
+    def dimensionJob(table: String, bronzeTable: String, cleaned: => DataFrame,
+        cfg: QualityReport.Config, gate: => org.apache.spark.sql.Column): Unit = {
+      val stamp = incremental(s"bronze_to_silver_$table",
+          Map("bronze" -> listingDigest(spark, Seq(bronze.path(bronzeTable)))),
+          Seq(lay.silver(table), lay.quarantine(table), lay.quality(table))) { _ =>
+        reportEntries(silverJob(table, cleaned, cfg, gate, partitionCols = Seq.empty))
+      }
+      record(table, reportOf(stamp))
+    }
+
+    def silverListing(table: String): String = listingDigest(spark, Seq(lay.silver(table)))
+
+    def overwrite(df: DataFrame, path: String): Unit =
+      df.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(path)
+
     val jobs = Seq(
-      Pipeline.Job("bronze_to_silver_orders")(() => {
+      job("bronze_to_silver_orders") {
         // Incremental: only rows past the committed high-water mark (the
         // predicate pushes into the parquet scan); first run = full load.
         val from = store.get("orders", "o_orderdate")
@@ -152,14 +294,33 @@ object RunPipeline {
           case Some(mark) => bronze.orders.filter(col("o_orderdate") > mark)
           case None       => bronze.orders
         }
-        // one probe: is there an increment, and the mark it will commit
-        val probe = incr.agg(count(lit(1)), max(col("o_orderdate")).cast("string")).head()
+        // one probe: is there an increment, the mark it will commit, and
+        // the order years it spans
+        val orderYear = year(col("o_orderdate").cast("date"))
+        val probe = incr.agg(count(lit(1)), max(col("o_orderdate")).cast("string"),
+          min(orderYear), max(orderYear)).head()
         if (probe.getLong(0) == 0L) {
           quality.putIfAbsent("orders",
             QualityReport.Report(Seq.empty, 100.0, passed = true, severity = "none"))
           gates.putIfAbsent("orders", (0L, 0L))
         } else {
-          silverJob("orders", SilverOrders.silver(incr, conf),
+          // The increment merges into the order years silver already holds:
+          // their rows stay unless the increment re-delivers the key, so a
+          // mid-year slice keeps the year's earlier rows and a replay is
+          // idempotent. An increment of new years reads nothing back.
+          val loaded =
+            if (probe.isNullAt(2)) Seq.empty
+            else partitions(spark, lay.silver("orders"), "order_year").keys.map(_.toInt)
+              .filter(y => y >= probe.getInt(2) && y <= probe.getInt(3)).toSeq
+          val merge: DataFrame => DataFrame =
+            if (loaded.isEmpty) identity
+            else fresh => {
+              val kept = silverOrders(Some(loaded))
+              kept.join(fresh.select(col("o_orderkey").as("_key")),
+                  kept("o_orderkey") <=> col("_key"), "left_anti")
+                .unionByName(fresh)
+            }
+          record("orders", silverJob("orders", SilverOrders.silver(incr, conf),
             QualityReport.Config(
               nullColumns = Seq("o_orderkey", "o_custkey", "order_date"),
               dupKeys = Seq("o_orderkey"),
@@ -167,56 +328,70 @@ object RunPipeline {
                 min = Some(0.0)))),
             gate = col("is_complete_order") && col("data_quality_score") >= 0.8,
             partitionCols = Seq("order_year"),
-            quarantineRun = Some(from.getOrElse(FullLoad)))
+            quarantineRun = Some(from.getOrElse(FullLoad)),
+            merge = merge))
           // At-least-once: the mark commits only now, after both writes —
           // a crash above re-reads this increment on the next run.
           Option(probe.getString(1)).foreach(store.put("orders", "o_orderdate", _))
         }
-      }),
-      Pipeline.Job("bronze_to_silver_customers")(() =>
-        silverJob("customers", SilverCustomers.clean(bronze.customer),
+      },
+      job("bronze_to_silver_customers") {
+        dimensionJob("customers", "customer", SilverCustomers.clean(bronze.customer),
           QualityReport.Config(
             nullColumns = Seq("c_custkey", "name_normalized"),
             dupKeys = Seq("c_custkey")),
-          gate = col("data_quality_score") >= 0.75,
-          partitionCols = Seq.empty)),
-      Pipeline.Job("bronze_to_silver_parts")(() =>
-        silverJob("parts", SilverParts.clean(bronze.part),
+          gate = col("data_quality_score") >= 0.75)
+      },
+      job("bronze_to_silver_parts") {
+        dimensionJob("parts", "part", SilverParts.clean(bronze.part),
           QualityReport.Config(
             nullColumns = Seq("p_partkey", "name_clean"),
             dupKeys = Seq("p_partkey"),
             rangeRules = Seq(DataQuality.RangeRule("margin_percentage",
               min = Some(0.0), max = Some(100.0)))),
-          gate = col("data_quality_score") >= 0.8,
-          partitionCols = Seq.empty)),
-      Pipeline.Job("silver_to_gold_sales_summary",
-          dependsOn = Seq("bronze_to_silver_orders"))(() => {
-        val facts = silverOrdersAsFacts(spark, lay)
-        Sinks.parquetPartitioned(
-          SalesSummary.daily(facts).withColumn("order_year", year(col("order_date"))),
-          lay.gold("daily_sales"), Seq("order_year"))
-        Sinks.parquetPartitioned(SalesSummary.monthly(facts),
-          lay.gold("monthly_sales"), Seq("order_year"))
-      }),
-      Pipeline.Job("silver_to_gold_customer_analytics",
-          dependsOn = Seq("bronze_to_silver_orders", "bronze_to_silver_customers"))(() => {
-        val dim = ParquetIo.read(spark, lay.silver("customers"))
-          .select(col("c_custkey"), col("c_name"),
-            col("segment_standardized").as("c_mktsegment"), col("c_acctbal"))
-        val out = CustomerAnalytics.withRfm(
-          CustomerAnalytics.analytics(dim, silverOrdersAsFacts(spark, lay), conf))
-        out.write.mode(SaveMode.Overwrite).option("compression", "snappy")
-          .parquet(lay.gold("customer_analytics"))
-      }),
-      Pipeline.Job("silver_to_gold_ml_features",
-          dependsOn = Seq("bronze_to_silver_orders"))(() => {
-        val out = MlFeatures.keyedSplit(
-          MlFeatures.withTargets(
-            MlFeatures.features(silverOrdersAsFacts(spark, lay), conf)),
-          "o_custkey")
-        out.write.mode(SaveMode.Overwrite).option("compression", "snappy")
-          .parquet(lay.gold("ml_features"))
-      })
+          gate = col("data_quality_score") >= 0.8)
+      },
+      // only the order years whose silver partition changed are rebuilt
+      job("silver_to_gold_sales_summary", "bronze_to_silver_orders") {
+        incremental("silver_to_gold_sales_summary",
+            partitions(spark, lay.silver("orders"), "order_year")
+              .map { case (y, files) => y -> digest(files.iterator.map(fileLine)) },
+            Seq(lay.gold("daily_sales"), lay.gold("monthly_sales"))) { changed =>
+          val years = changed.map(_.toSeq.map(_.toInt))
+          val facts = silverOrdersAsFacts(years)
+          val daily = SalesSummary.daily(facts).withColumn("order_year", year(col("order_date")))
+          val monthly = SalesSummary.monthly(facts)
+          val write: (DataFrame, String) => Unit =
+            if (years.isEmpty) Sinks.parquetPartitioned(_, _, Seq("order_year"))
+            else Sinks.parquetOverwritePartitions(_, _, Seq("order_year"))
+          write(daily, lay.gold("daily_sales"))
+          write(monthly, lay.gold("monthly_sales"))
+          Map.empty
+        }
+      },
+      job("silver_to_gold_customer_analytics",
+          "bronze_to_silver_orders", "bronze_to_silver_customers") {
+        incremental("silver_to_gold_customer_analytics",
+            Map("orders" -> silverListing("orders"), "customers" -> silverListing("customers")),
+            Seq(lay.gold("customer_analytics"))) { _ =>
+          val dim = spark.read.schema(customersSchema).parquet(lay.silver("customers"))
+            .select(col("c_custkey"), col("c_name"),
+              col("segment_standardized").as("c_mktsegment"), col("c_acctbal"))
+          overwrite(CustomerAnalytics.withRfm(
+            CustomerAnalytics.analytics(dim, silverOrdersAsFacts(), conf)),
+            lay.gold("customer_analytics"))
+          Map.empty
+        }
+      },
+      job("silver_to_gold_ml_features", "bronze_to_silver_orders") {
+        incremental("silver_to_gold_ml_features",
+            Map("orders" -> silverListing("orders")), Seq(lay.gold("ml_features"))) { _ =>
+          overwrite(MlFeatures.keyedSplit(
+            MlFeatures.withTargets(MlFeatures.features(silverOrdersAsFacts(), conf)),
+            "o_custkey"), lay.gold("ml_features"))
+          Map.empty
+        }
+      }
     )
 
     PipelineResult(Pipeline.run(jobs, policy, Some(dlq)),

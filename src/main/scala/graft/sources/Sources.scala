@@ -297,12 +297,15 @@ object Sinks {
     * then the rejects land in that one partition by dynamic overwrite, so
     * each run adds its own partition, a replay of a run replaces only that
     * partition, and a run with no `rejects` (the count of failing rows)
-    * writes nothing there.
+    * writes nothing there. `merge` turns the clean rows into what the clean
+    * side writes, say the rows already in the partitions they touch,
+    * updated by them.
     */
   def writeSplit(tagged: DataFrame, cleanPath: String, quarantinePath: String,
       reason: String, rejects: Long, partitionCols: Seq[String] = Seq.empty,
-      runPartition: Option[(String, String)] = None): Unit = {
-    val clean = tagged.filter(col(PassCol)).drop(PassCol)
+      runPartition: Option[(String, String)] = None,
+      merge: DataFrame => DataFrame = identity): Unit = {
+    val clean = merge(tagged.filter(col(PassCol)).drop(PassCol))
     val bad = tagged.filter(!col(PassCol) || col(PassCol).isNull).drop(PassCol)
       .withColumn("quarantine_reason", lit(reason))
     if (partitionCols.isEmpty)

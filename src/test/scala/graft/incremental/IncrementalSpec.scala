@@ -17,6 +17,23 @@ class IncrementalSpec extends SparkSpec {
     intercept[IllegalArgumentException](store.put("../evil", "c", "x"))
   }
 
+  test("job stamps round-trip their entries and sit beside the marks") {
+    val dir = tempDir("wmspec-stamp")
+    val store = new WatermarkStore(dir)
+    assert(store.stamp("job").isEmpty)
+    val entries = Map("conf" -> "GraftConf(2002-01-01,42)", "input:1998" -> "ab12", "gate" -> "")
+    store.put("t", "c", "2024-01-01")
+    store.putStamp("job", entries)
+    assert(store.stamp("job").contains(entries))
+    store.putStamp("job", Map("conf" -> "x"))
+    assert(store.stamp("job").contains(Map("conf" -> "x")))
+    assert(store.get("t", "c").contains("2024-01-01"))
+    // one file per key, no temp file left behind
+    assert(new java.io.File(dir).list().toSet === Set("t.c.wm", "job.stamp"))
+    intercept[IllegalArgumentException](store.putStamp("job", Map("a" -> "b\tc")))
+    intercept[IllegalArgumentException](store.putStamp("../evil", entries))
+  }
+
   test("union of range batches equals full scan exactly") {
     val rnd = new scala.util.Random(11)
     val df = Seq.fill(1000)(rnd.nextDouble() * 1e6).toDF("wm")
